@@ -56,8 +56,8 @@ from .operators.tiers import (
 from .ops.pipeline import RollupPipeline
 from .plans.router import classify_preds, routed_aggregate, routed_downsample
 from .sources.segments import (
-    CANONICAL_COLUMNS, DEFAULT_CHUNK_US, canonicalize, decode_segments,
-    time_range_from_segments, with_ts,
+    CANONICAL_COLUMNS, DEFAULT_CHUNK_US, canonicalize, chunk_range,
+    decode_segments, decoded_row_schema, time_range_from_segments, with_ts,
 )
 
 # the write-API row shape (Row.java:32-46 analog)
@@ -79,7 +79,12 @@ class TranscriptTSDB:
         # and the engine does chunk arithmetic on it BEFORE the first
         # canonicalize call of a session (the fast-flush eligibility
         # check): pin UTC at connect, not lazily, or touched-chunk ids
-        # near chunk boundaries could disagree with the pipeline's
+        # near chunk boundaries could disagree with the pipeline's.
+        # The one other session conf the engine changes is raised by
+        # SnapshotTable.read itself: spark.sql.sources.
+        # parallelPartitionDiscovery.threshold, lifted to each read's
+        # path count (never lowered) so manifest-planned reads list
+        # their files in-process instead of in a Spark job.
         self.spark.conf.set("spark.sql.session.timeZone", "UTC")
         self.root = root
         self._buffer: list[DataFrame] = []
@@ -240,7 +245,8 @@ class TranscriptTSDB:
         rebuild/merge is idempotent."""
         if self._segments_l0.current().files:
             seen = decode_segments(
-                self._segments_l0.read(self.spark).filter(
+                self._segments_l0.read(self.spark,
+                                       (min(touched), max(touched))).filter(
                     F.col("time_chunk").isin([int(c) for c in touched])),
                 ["conv_id", "turn_idx"]).distinct()
             new_rows = new_rows.join(seen, ["conv_id", "turn_idx"],
@@ -405,16 +411,24 @@ class TranscriptTSDB:
 
     # ---------- incremental-flush machinery ----------
 
-    def _read_segments(self) -> DataFrame:
+    def _read_segments(self, chunks: tuple[int, int] | None = None
+                       ) -> DataFrame:
         """The committed segment store: base ∪ l0 delta segments (same
         schema; zone-map pruning applies to both). (conv_id, turn_idx)
         is unique across the union — l0 only ever receives rows strictly
         after each conversation's committed latest (the eligibility
-        probe), so no read-side dedup is needed."""
-        seg = self._segments.read(self.spark)
+        probe), so no read-side dedup is needed. `chunks` prunes both
+        manifests to an inclusive time_chunk range (SnapshotTable.read);
+        l0 files record no chunk and are always read."""
+        seg = self._segments.read(self.spark, chunks)
         if self._segments_l0.current().files:
-            seg = seg.unionByName(self._segments_l0.read(self.spark))
+            seg = seg.unionByName(self._segments_l0.read(self.spark, chunks))
         return seg
+
+    def _chunks(self, lb_ms: int, ub_ms: int) -> tuple[int, int]:
+        """The manifest pruning range of a [lb, ub) read, over the
+        store's stamped chunk width."""
+        return chunk_range(lb_ms, ub_ms, self._pipeline.chunk_us)
 
     def _decoded_input(self) -> DataFrame:
         """The committed history in canonicalize-input form, re-derived
@@ -503,7 +517,7 @@ class TranscriptTSDB:
         Context rows live outside the restricted chunks, so run() drops
         them after the windows; a context row whose chunk IS touched
         duplicates its decoded sibling and upsert-dedup keeps one."""
-        seg = self._read_segments().filter(
+        seg = self._read_segments((min(touched), max(touched))).filter(
             F.col("time_chunk").isin([int(c) for c in touched]))
         decoded = (decode_segments(
             seg, ["conv_id", "turn_idx", "role", "text", "tool", "ts_us"])
@@ -733,10 +747,13 @@ class TranscriptTSDB:
         """Rows of one conversation over [lb, ub), decoded from the
         compressed store: shard-routed, zone-map-pruned, lazy per-column
         decode (TSFileService.java:297-447)."""
-        cols = list(dict.fromkeys(["conv_id", "ts_us", column]))
         return time_range_from_segments(
-            self._read_segments(), conv_id, lb_ms, ub_ms,
-            cols, n_buckets=self.n_buckets)
+            self._read_segments(self._chunks(lb_ms, ub_ms)), conv_id,
+            lb_ms, ub_ms, self._range_cols(column), n_buckets=self.n_buckets)
+
+    @staticmethod
+    def _range_cols(column: str) -> list[str]:
+        return list(dict.fromkeys(["conv_id", "ts_us", column]))
 
     def _edge_rows(self, conv_id: str, lb_ms: int, ub_ms: int,
                    column: str) -> DataFrame:
@@ -782,9 +799,8 @@ class TranscriptTSDB:
                       or (ub_ms - lb_ms) % interval_ms)
         if not aligned:
             return self._range_decode(conv_id, lb_ms, ub_ms, column)
-        # plan-only dtype probe (no job): the decoded-view column type
-        vtype = dict(self._range_decode(conv_id, lb_ms, lb_ms,
-                                        column).dtypes)[column]
+        # the decoded-view column type, straight from the decode schema
+        vtype = decoded_row_schema([column])[column].dataType.simpleString()
         pass_all, pass_none = classify_preds(column, filter_op,
                                              filter_value, vtype)
         rows = (tier.filter((F.col("conv_id") == conv_id)
@@ -797,10 +813,10 @@ class TranscriptTSDB:
         buckets = sorted(int(r["bucket_ms"]) for r in rows)
         if not buckets:
             # nothing straddles (e.g. unfiltered queries: every bucket is
-            # covered): an empty-but-schema-correct relation, no decode
-            # scan at all
-            return self._range_decode(conv_id, lb_ms, lb_ms,
-                                      column).filter(F.lit(False))
+            # covered): an empty-but-schema-correct relation, no table
+            # read at all
+            return self.spark.createDataFrame(
+                [], decoded_row_schema(self._range_cols(column)))
         ranges = []  # merge adjacent minutes into contiguous decode runs
         start = prev = buckets[0]
         for b in buckets[1:]:
@@ -897,8 +913,8 @@ class TranscriptTSDB:
         cols = columns or [c for c in CANONICAL_COLUMNS if c != "ts"]
         if self._committed():
             return time_range_from_segments(
-                self._read_segments(), conv_id, lb_ms, ub_ms,
-                cols, n_buckets=self.n_buckets)
+                self._read_segments(self._chunks(lb_ms, ub_ms)), conv_id,
+                lb_ms, ub_ms, cols, n_buckets=self.n_buckets)
         # memtable overlay: one conversation's pruned decode ∪ its buffer
         return Q.time_range(self._conv_rows(conv_id), conv_id,
                             lb_ms, ub_ms, cols)
@@ -912,7 +928,8 @@ class TranscriptTSDB:
             if column in _TIER_COLUMNS:
                 return routed_aggregate(
                     self._edge_rows(conv_id, lb_ms, ub_ms, column),
-                    self._tier_1m.read(self.spark),
+                    self._tier_1m.read(self.spark,
+                                       self._chunks(lb_ms, ub_ms)),
                     conv_id, column, lb_ms, ub_ms, agg)
             return Q.aggregate(self._range_decode(conv_id, lb_ms, ub_ms, column),
                                conv_id, column, lb_ms, ub_ms, agg)
@@ -930,7 +947,8 @@ class TranscriptTSDB:
         segments. Buffered state: memtable-visible canonical path."""
         if self._committed():
             if column in _TIER_COLUMNS:
-                tier = self._tier_1m.read(self.spark)
+                tier = self._tier_1m.read(self.spark,
+                                          self._chunks(lb_ms, ub_ms))
                 raw = self._downsample_raw(tier, conv_id, column, lb_ms,
                                            ub_ms, interval_ms, filter_op,
                                            filter_value)
@@ -1192,7 +1210,8 @@ class TranscriptTSDB:
                 or [("1m", lb_ms, ub_ms)]
         parts = []
         for name, lo, hi in pieces:
-            t = self._pipeline.table(f"tier_rate_{name}").read(self.spark)
+            t = self._pipeline.table(f"tier_rate_{name}").read(
+                self.spark, self._chunks(lo, hi))
             parts.append(t.filter((F.col("bucket_ms") >= lo)
                                   & (F.col("bucket_ms") < hi))
                           .select(*self._RATE_COLS))

@@ -133,8 +133,7 @@ class LineageLog:
     def read(self, spark: SparkSession) -> DataFrame:
         # jobs record different column sets (rollup chunk rows vs
         # retention drop rows): merge schemas, absent fields read as null
-        return spark.read.option("mergeSchema", "true").parquet(
-            *self.table.file_paths())
+        return self.table.read(spark, merge_schema=True)
 
     def compact(self, max_files: int = 64) -> bool:
         """Merge the per-flush lineage files into one when they exceed
@@ -466,8 +465,11 @@ class RollupPipeline:
             # numeric columns only) — idempotent overwrite, O(chunk
             # numeric + batch), no text decode
             chunk_filter = F.col("time_chunk").isin(touched)
-            seg = self.table("segments").read(self.spark).filter(chunk_filter)
-            both = seg.unionByName(l0.read(self.spark).filter(chunk_filter))
+            span = (min(touched), max(touched))
+            seg = (self.table("segments").read(self.spark, span)
+                   .filter(chunk_filter))
+            both = seg.unionByName(l0.read(self.spark, span)
+                                   .filter(chunk_filter))
             num = decode_segments(
                 both, ["conv_id", "time_chunk", "ts_us", "text_len",
                        "latency_s", "role", "tool"])
@@ -495,7 +497,7 @@ class RollupPipeline:
             # batches), never O(history).
             if l0.current().files:
                 l0_latest_in = decode_segments(
-                    l0.read(self.spark).filter(chunk_filter),
+                    l0.read(self.spark, span).filter(chunk_filter),
                     ["conv_id", "turn_idx", "role", "text", "tool", "ts_us",
                      "text_len", "latency_s", "conv_bucket", "time_chunk"])
                 l0_latest_in = (l0_latest_in
@@ -505,10 +507,12 @@ class RollupPipeline:
                                             F.col("text_len").cast("int")))
             else:  # empty batch against an empty l0: nothing to repair
                 l0_latest_in = batch_canon
-            lt_in = (lt.read(self.spark).filter(chunk_filter)
-                     .unionByName(l0_latest_in
-                                  .select(*lt.read(self.spark).columns))
-                     if lt.current().files else l0_latest_in)
+            if lt.current().files:
+                lt_old = lt.read(self.spark, span)
+                lt_in = lt_old.filter(chunk_filter).unionByName(
+                    l0_latest_in.select(*lt_old.columns))
+            else:
+                lt_in = l0_latest_in
             _parallel_jobs(
                 lambda: self.table("tier_conv_1m").overwrite_partitions_multi(
                     build_conv_tier(num).withColumn("time_chunk", chunk_of),
@@ -717,8 +721,8 @@ class RollupPipeline:
         pending = self.checkpoint.cascade_pending()
         if not pending:
             return
-        conv_1m = self.table("tier_conv_1m").read(self.spark)
-        rate_1m = self.table("tier_rate_1m").read(self.spark)
+        conv_1m = self.table("tier_conv_1m")
+        rate_1m = self.table("tier_rate_1m")
         floor_ms = self._tier_1m_floor_ms()
         # each (grain, width) rebuild is an independent job into its own
         # table: submit concurrently (same rationale as the 1m writes)
@@ -733,8 +737,8 @@ class RollupPipeline:
         ])
         self.checkpoint.clear_cascade_pending(pending)
 
-    def _cascade_tier(self, tbl, base: DataFrame, rollup, width_ms: int,
-                      pending: set[int], floor_ms: int | None,
+    def _cascade_tier(self, tbl, base_tbl: SnapshotTable, rollup,
+                      width_ms: int, pending: set[int], floor_ms: int | None,
                       sort: list[str] | None = None) -> None:
         chunk_us = self.chunk_us or DEFAULT_CHUNK_US
         width_us = width_ms * 1_000
@@ -748,6 +752,7 @@ class RollupPipeline:
             # a pre-partitioned layout: one atomic full rebuild that also
             # migrates the layout. Correctness-first fallback; the
             # default 6h chunks align with both 1h and 1d.
+            base = base_tbl.read(self.spark)
             full = rollup(base, width_ms).withColumn("time_chunk", chunk_of)
             if floor_ms is not None and tbl.current().files:
                 # retention floor set: the 1m base is truncated below it,
@@ -757,7 +762,7 @@ class RollupPipeline:
                 # rows below the cutover — the continuous-aggregate
                 # guarantee holds through the migration too.
                 cutover = -(-floor_ms // width_ms) * width_ms
-                frozen = (tbl.read(base.sparkSession)
+                frozen = (tbl.read(self.spark)
                           .filter(F.col("bucket_ms") < cutover))
                 if "time_chunk" not in frozen.columns:  # legacy layout
                     frozen = frozen.withColumn("time_chunk", chunk_of)
@@ -789,6 +794,7 @@ class RollupPipeline:
                                          (w + width_ms) * 1000 // chunk_us)})
         win_col = (F.floor(F.col("bucket_ms") / F.lit(width_ms))
                    * F.lit(width_ms))
+        base = base_tbl.read(self.spark, (needed[0], needed[-1]))
         if len(windows) <= 256:
             part = base.filter(F.col("time_chunk").isin(needed)).filter(
                 win_col.isin(sorted(windows)))
@@ -837,17 +843,17 @@ class RollupPipeline:
             if c in set(int(b) for b in batch) and f["path"].startswith(
                     f"snap{snap.snapshot_id}-"):
                 new_files.setdefault(int(c), []).append(f["path"])
-        # stats from exactly the files this commit wrote — not a
-        # whole-table rescan (which would be O(chunks^2) at scale). Only
-        # lineage needs them, so the job joins the concurrent batch below.
-        paths = [os.path.join(seg_table.data_dir, p)
-                 for fs in new_files.values() for p in fs]
+        # stats from exactly the files this commit wrote — the batch's
+        # chunks, manifest-pruned to their span, not a whole-table rescan
+        # (which would be O(chunks^2) at scale). Only lineage needs them,
+        # so the job joins the concurrent batch below.
         stats: dict[int, tuple[int, int]] = {}
 
         def collect_stats():
             stats.update({
                 int(r["time_chunk"]): (int(r["rows"]), int(r["bytes"]))
-                for r in self.spark.read.parquet(*paths)
+                for r in seg_table.read(self.spark, (min(batch), max(batch)))
+                .filter(F.col("time_chunk").isin([int(c) for c in batch]))
                 .groupBy("time_chunk")
                 .agg(F.sum("n_rows").alias("rows"),
                      F.sum("encoded_bytes").alias("bytes")).collect()})

@@ -50,6 +50,19 @@ from ..functions.codecs.strings import (
 
 DEFAULT_N_BUCKETS = 64
 DEFAULT_CHUNK_US = 6 * 3600 * 1_000_000  # 6h time chunks
+
+
+def chunk_range(lb_ms: int, ub_ms: int, chunk_us: int) -> tuple[int, int]:
+    """Inclusive (lo, hi) `time_chunk` span of the half-open ms range
+    [lb, ub): the manifest pruning range of every time-filtered read
+    (SnapshotTable.read). A row at ts_us sits in chunk
+    floor(ts_us / chunk_us) (canonicalize), a tier row in the chunk of
+    its bucket start. An empty or inverted range gives hi < lo, which
+    prunes every file that records a chunk."""
+    lo = lb_ms * 1000 // chunk_us
+    if ub_ms <= lb_ms:
+        return lo, lo - 1
+    return lo, (ub_ms * 1000 - 1) // chunk_us
 # conv-range sub-segment target (rows): an encode group larger than this
 # is split at conversation boundaries into sub-segments of >= this many
 # rows, each carrying a conv_id zone map. ~4k rows is the measured

@@ -1,7 +1,7 @@
 """Minimal snapshot-manifest table format over parquet ("Iceberg-ready").
 
 The target spec calls for Iceberg tables; this sandbox has no Iceberg
-runtime jar, so we implement the three Iceberg properties the engine
+runtime jar, so we implement the four Iceberg properties the engine
 actually depends on, over plain parquet + JSON manifests:
 
 1. **Atomic commits**: a snapshot is a JSON manifest listing immutable
@@ -14,6 +14,16 @@ actually depends on, over plain parquet + JSON manifests:
 3. **Partition-scoped replace**: `overwrite_partitions` commits a snapshot
    where files carrying the given partition values are swapped — the
    idempotent tier-write primitive.
+4. **Manifest scan planning**: the manifest is the table's file index
+   (every file, its rows, its recorded `time_chunk`), so `read` never
+   asks Spark to search for files. A read given an inclusive
+   `time_chunk` range keeps only the files whose recorded chunk falls in
+   it (files with no recorded chunk are always kept — the same rule
+   `drop_partitions` applies, from the same helper), and hands exactly
+   those paths to Spark with the schema memoized per snapshot: no file-
+   listing job, no footer-inference job. Pruning only skips files; the
+   callers' row predicates still decide every answer. (Iceberg's
+   manifest-driven scan planning.)
 
 Swapping this for real Iceberg is a one-module change: `read` becomes
 `spark.table(...)`, `append/overwrite` become `writeTo(...)` calls.
@@ -34,12 +44,65 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 from dataclasses import dataclass
 from typing import Any
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Above this many paths, spark.read lists files with a distributed job
+# (one task per path) before it plans anything. The manifest already
+# holds the file list, so reads raise the session's threshold to their
+# path count: listing stays in-process. The threshold is only ever
+# raised, never restored — concurrent reads (the pipeline's
+# _parallel_jobs threads) would otherwise race a restore — and the lock
+# keeps a smaller raise from overwriting a larger one.
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_DISCOVERY_LOCK = threading.Lock()
+
+# Spark stores the writer's schema in every parquet footer it writes;
+# spark.read prefers it over the parquet schema when inferring
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# (table root, merge_schema) -> (snapshot identity, Spark schema): one
+# entry per table, replaced when the table commits a new snapshot
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _split_by_partition(files: list[dict], partition_col: str,
+                        pred) -> tuple[list[dict], list[dict]]:
+    """(matched, rest): matched files RECORD a `partition_col` value
+    satisfying `pred`; files with no recorded value always land in rest.
+    The one selection rule behind drop_partitions (matched = dropped) and
+    chunk-pruned reads (matched = outside the range, skipped)."""
+    matched, rest = [], []
+    for f in files:
+        v = f.get("partition", {}).get(partition_col)
+        (matched if v is not None and pred(v) else rest).append(f)
+    return matched, rest
+
+
+def _as_nullable(schema: StructType) -> StructType:
+    """Every field, element and value nullable — what file sources
+    report for the schema they read."""
+    def walk(t):
+        if isinstance(t, dict):
+            return {k: (True if k in ("nullable", "containsNull",
+                                      "valueContainsNull") else walk(v))
+                    for k, v in t.items()}
+        if isinstance(t, list):
+            return [walk(v) for v in t]
+        return t
+    return StructType.fromJson(walk(schema.jsonValue()))
+
+
+def _raise_discovery_threshold(spark: SparkSession, n_paths: int) -> None:
+    with _DISCOVERY_LOCK:
+        if n_paths > int(spark.conf.get(_DISCOVERY_THRESHOLD, "32")):
+            spark.conf.set(_DISCOVERY_THRESHOLD, str(n_paths))
 
 
 @dataclass
@@ -91,11 +154,63 @@ class SnapshotTable:
     def file_paths(self) -> list[str]:
         return [os.path.join(self.data_dir, f["path"]) for f in self.current().files]
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        paths = self.file_paths()
-        if not paths:
+    def read(self, spark: SparkSession,
+             chunks: tuple[int, int] | None = None,
+             merge_schema: bool = False) -> DataFrame:
+        """The CURRENT snapshot as a DataFrame, planned from the manifest
+        (property 4). `chunks` is an inclusive (lo, hi) `time_chunk`
+        range: files recording a chunk outside it are skipped (an empty
+        or inverted range skips every recorded file); files recording no
+        chunk are always read. A selection of zero files is an empty
+        DataFrame with the table's schema. `merge_schema` unions the
+        columns of files written with different column sets (absent
+        fields read as null)."""
+        snap = self.current()
+        if not snap.files:
             raise ValueError(f"table {self.root} is empty")
-        return spark.read.parquet(*paths)
+        files = snap.files
+        if chunks is not None:
+            lo, hi = int(chunks[0]), int(chunks[1])
+            files = _split_by_partition(files, "time_chunk",
+                                        lambda c: not lo <= int(c) <= hi)[1]
+        schema = self._schema(spark, snap, merge_schema)
+        if not files:
+            return spark.createDataFrame([], schema)
+        paths = [os.path.join(self.data_dir, f["path"]) for f in files]
+        _raise_discovery_threshold(spark, len(paths))
+        return spark.read.schema(schema).parquet(*paths)
+
+    def _schema(self, spark: SparkSession, snap: Snapshot,
+                merge_schema: bool) -> StructType:
+        """The schema spark.read would infer for `snap`, memoized per
+        (table root, snapshot id) so a read submits no inference job.
+        The snapshot identity also carries the first file's inode and
+        mtime, so a table re-created at the same root never reuses a
+        stale entry."""
+        first = os.path.join(self.data_dir, snap.files[0]["path"])
+        st = os.stat(first)
+        ident = (snap.snapshot_id, st.st_ino, st.st_mtime_ns)
+        memo = _SCHEMAS.get((self.root, merge_schema))
+        if memo is not None and memo[0] == ident:
+            return memo[1]
+        meta = (None if merge_schema
+                else pq.read_schema(first).metadata or {})
+        if meta and _SPARK_SCHEMA_KEY in meta:
+            # Spark infers from the first file's footer, preferring the
+            # schema it stored there, and reads every field as nullable
+            schema = _as_nullable(StructType.fromJson(
+                json.loads(meta[_SPARK_SCHEMA_KEY])))
+        else:
+            # not Spark-written (pandas/arrow sources), or a merge across
+            # files: one inference, paid once per snapshot
+            paths = ([os.path.join(self.data_dir, f["path"])
+                      for f in snap.files] if merge_schema else [first])
+            _raise_discovery_threshold(spark, len(paths))
+            schema = (spark.read.option("mergeSchema", str(merge_schema)
+                                        .lower())
+                      .parquet(*paths).schema)
+        _SCHEMAS[(self.root, merge_schema)] = (ident, schema)
+        return schema
 
     def read_pandas(self):
         import pandas as pd
@@ -204,10 +319,7 @@ class SnapshotTable:
         dropped. Returns (snapshot, dropped-file manifest entries); a
         no-op match returns (current, []) without committing."""
         cur = self.current()
-        dropped, kept = [], []
-        for f in cur.files:
-            v = f.get("partition", {}).get(partition_col)
-            (dropped if v is not None and pred(v) else kept).append(f)
+        dropped, kept = _split_by_partition(cur.files, partition_col, pred)
         if not dropped:
             return cur, []
         snap = self._commit(

@@ -69,3 +69,19 @@ def oracle_downsample(pdf, conv_id, column, lb_ms, ub_ms, interval_ms, agg,
             value = vals.max()
         rows.append({"conv_id": conv_id, "ts_ms": lb_ms + i * interval_ms, "value": value})
     return pd.DataFrame(rows)
+
+
+def oracle_canonical(rows: pd.DataFrame) -> pd.DataFrame:
+    """Canonical per-turn rows of written transcript rows (conv_id,
+    turn_idx, role, text, tool, ts): newest ts wins per (conv_id,
+    turn_idx), ts_us in micros, text_len in characters, latency_s = ts
+    gap to the previous turn_idx of the conversation (0 for the first)."""
+    df = rows.copy()
+    df["ts_us"] = df["ts"].astype("datetime64[us]").astype("int64")
+    df = (df.sort_values(["conv_id", "turn_idx", "ts_us"])
+            .drop_duplicates(["conv_id", "turn_idx"], keep="last"))
+    df["text_len"] = df["text"].str.len().astype("int64")
+    prev = df.groupby("conv_id")["ts_us"].shift(1)
+    df["latency_s"] = ((df["ts_us"] - prev) / 1e6).fillna(0.0)
+    df["turn_idx"] = df["turn_idx"].astype("int32")
+    return df.reset_index(drop=True)
