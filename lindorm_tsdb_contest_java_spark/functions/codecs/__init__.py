@@ -18,8 +18,8 @@ write-path compression (`/root/reference/src/.../compress/`):
 
 Every encoder AND decoder is vectorized numpy — no per-row Python
 anywhere (the Gorilla planes layout exists precisely so the read path
-needs no sequential token walk; the legacy interleaved bitstream keeps a
-sequential fallback reader for foreign streams).
+needs no sequential token walk; the paper's interleaved bitstream has
+no reader at all).
 """
 
 # Wire-format version of the segment blob codecs. Bump on ANY incompatible

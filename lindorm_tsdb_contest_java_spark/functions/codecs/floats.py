@@ -122,5 +122,4 @@ def float_decode(blob: bytes) -> np.ndarray:
         return gorilla_decode(blob[1:])
     raise ValueError(
         f"unknown float codec mode {mode}: not a float_encode blob "
-        "(legacy raw gorilla blobs must be decoded with gorilla_decode; "
-        "re-encode segments written by an older codec version)")
+        "(re-encode segments written by an older codec version)")

@@ -1,16 +1,16 @@
-"""Gorilla XOR bitstream codec for float64 columns.
+"""Gorilla XOR codec for float64 columns.
 
 Reimplements, from the public Gorilla paper (Pelkonen et al., VLDB 2015),
 the XOR value-compression scheme the reference vendors in
 `compress/gorilla/ValueCompressor.java:33-91` — same capability, our own
-bitstream:
+wire format. The paper interleaves one token per value:
 
 - token '0'                              : XOR with previous value is 0
 - token '10' + sig bits                  : reuse previous leading/trailing window
 - token '11' + 5b lead + 6b (sig-1) + sig bits : new window
 
 Differences from the reference (deliberate, documented):
-- the default wire format ("planes", mode flag in the header) separates
+- the wire format ("planes", mode flag in the header) separates
   the three information planes of the always-new-window token stream —
   zero-XOR bitmap, fixed 11-bit (lead, sig-1) lanes, variable-width
   significant bits — so BOTH encode and decode are 100%% vectorized
@@ -18,9 +18,9 @@ Differences from the reference (deliberate, documented):
   interleaved bitstream forces a sequential token walk on decode, which
   was the one per-row-Python loop on the engine's hot read path. Cost
   per nonzero XOR is 12+sig bits vs the paper's 13+sig ('11' token);
-- the decoder still reads the paper-layout bitstream (legacy header,
-  both '10' and '11' tokens) via the sequential fallback, matching the
-  batch-decode capability of the vendored Decompressor.java:38.
+- nothing reads the paper-layout bitstream: no encoder writes it and
+  the pipeline refuses stores older than CODEC_VERSION 10, so a header
+  without the planes flag raises ValueError instead of being walked.
 
 Operates on raw u64 bit patterns: NaN payloads, -0.0, denormals, ±inf all
 round-trip bit-exactly.
@@ -30,8 +30,8 @@ Planes wire format (all little-endian):
   <bitmap: (n-1+7)//8 bytes, bit k = value k+1 has nonzero XOR>
   <meta: 11-bit lanes lead|{sig-1}<<5 at bit k*11, word-padded>
   <sigvals: variable-width lanes at bit cumsum(sig), word-padded>
-Legacy bitstream format: <u64 n> <u64 total_bits> <u64 words...>
-(n < 2^63 always, so the FLAG bit cleanly separates the two.)
+(n < 2^63 always, so the FLAG bit cleanly separates a planes header from
+the paper layout's <u64 n> <u64 total_bits> header.)
 """
 
 from __future__ import annotations
@@ -165,47 +165,13 @@ def _decode_planes(blob: bytes, n: int) -> np.ndarray:
 
 
 def gorilla_decode(blob: bytes) -> np.ndarray:
-    n, total_bits = _HDR.unpack_from(blob, 0)
-    if n & _MODE1_FLAG:
-        n &= ~_MODE1_FLAG
-        if n == 0:
-            return np.zeros(0, dtype=np.float64)
-        return _decode_planes(blob, n)
-    # legacy paper-layout bitstream ('0'/'10'/'11' tokens): sequential walk
+    (n,) = struct.unpack_from("<Q", blob, 0)
+    if not n & _MODE1_FLAG:
+        raise ValueError(
+            "not a gorilla planes blob (header lacks the planes flag): "
+            "paper-layout bitstreams have no reader; re-encode segments "
+            "written by an older codec version")
+    n &= ~_MODE1_FLAG
     if n == 0:
         return np.zeros(0, dtype=np.float64)
-    words = np.frombuffer(blob, dtype=np.uint64, offset=16).tolist()
-    words.append(0)  # slack so reads near the end can touch w+1
-
-    out = np.empty(n, dtype=np.uint64)
-    pos = 0
-
-    def read(nb: int) -> int:
-        nonlocal pos
-        w, sh = pos >> 6, pos & 63
-        val = words[w] >> sh
-        if sh + nb > 64:
-            val |= words[w + 1] << (64 - sh)
-        pos += nb
-        return val & ((1 << nb) - 1)
-
-    prev = read(64)
-    out[0] = prev
-    p_lead = p_trail = 0
-    for i in range(1, n):
-        if read(1):
-            if read(1):  # '11' new window
-                lead = read(5)
-                sig = read(6) + 1
-                sigval = read(sig)
-                trail = 64 - lead - sig
-                p_lead, p_trail = lead, trail
-            else:  # '10' reuse window
-                sig = 64 - p_lead - p_trail
-                sigval = read(sig)
-                trail = p_trail
-            prev ^= sigval << trail
-        out[i] = prev
-    if pos > total_bits:
-        raise ValueError("gorilla stream overrun")
-    return out.view(np.float64)
+    return _decode_planes(blob, n)

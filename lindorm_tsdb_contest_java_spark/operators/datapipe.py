@@ -186,50 +186,40 @@ def minhash_oracle_list_sql(hs_col: str = "hs", n_hashes: int = 16) -> str:
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, n_hashes: int = 16,
                         band_size: int = 4,
-                        max_bucket: int = LSH_MAX_BUCKET,
-                        bucket_stats: str = "slim") -> DataFrame:
+                        max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """Band the signatures, groupBy band key, emit same-bucket pairs.
     One shuffle on band keys; the join explosion is bounded by bucket
     population (near-dups only), not n^2.
 
-    Candidate dedup is a groupBy on (id_a, id_b) ONLY — the shingle-hash
-    sets ride along as any_value payload, never as part of the shuffle
-    KEY (no array hashing/comparison in the exchange), and nothing
-    upstream is recomputed. Verification jaccard is over the compact
-    int64 hash sets from minhash_signatures (8 bytes/shingle instead of
-    the string shingles; the SQL oracle intersects the same lists).
+    Plan shape ("slim", r06): the band exchange carries (id, band, key)
+    ONLY; pairs are generated and id-deduped as bare (id_a, id_b) rows,
+    and each side's shingle-hash set joins back at the end to compute
+    jaccard once per unique pair. Verification jaccard is over the
+    compact int64 hash sets from minhash_signatures (8 bytes/shingle
+    instead of the string shingles; the SQL oracle intersects the same
+    lists). Column pruning means the hs-join sides never evaluate the
+    minhash UDF (hs is the pre-signature shingle-hash column), and the
+    deduped candidate side is broadcast — at corpus scale the hash sets
+    then never shuffle at all.
 
     `max_bucket` is the HOT-BUCKET VALVE (r03 verdict ask #2): a real
     dedup corpus has boilerplate clusters — 10^5 identical documents are
-    ONE bucket, and collecting them into a single collect_list row (each
-    member carrying its shingle-hash array) would OOM an executor before
-    the O(k^2) pair explosion even starts. Buckets above `max_bucket`
-    members never collect their hash arrays: they are reduced to
-    STAR PAIRS against the bucket's min-id representative — O(k) pairs
-    with their jaccard computed PER ROW against the window-provided
-    rep hash set, so the only thing collected for a hot bucket is
-    (member id, jaccard) pairs (16 bytes each). Dedup-grouping
-    connectivity is preserved (every member links to the
-    representative, so a transitive-closure keep/drop pass sees the
-    same clusters).
+    ONE bucket, and the O(k^2) pair explosion of such a bucket would
+    swamp every executor. Buckets above `max_bucket` members are reduced
+    to STAR PAIRS against the bucket's min-id representative — O(k)
+    pairs. Dedup-grouping connectivity is preserved (every member links
+    to the representative, so a transitive-closure keep/drop pass sees
+    the same clusters). The SQL oracle mirrors the same cap, so the
+    capped semantic is value-checked.
 
-    Plan shape (`bucket_stats`, default "slim" since r06): the band
-    exchange carries (id, band, key) ONLY; pairs are generated and
-    id-deduped as bare (id_a, id_b) rows, and each side's shingle-hash
-    set joins back at the end to compute jaccard once per unique pair.
-    Column pruning means the hs-join sides never evaluate the minhash
-    UDF (hs is the pre-signature shingle-hash column), and the deduped
-    candidate side is usually small enough for AQE to broadcast — at
-    corpus scale the hash sets then never shuffle at all, vs riding the
-    x n_bands explode AND the bucket window sort in the older "window"
-    mode. Interleaved A/B (tools/minhash_ab.py, 50k docs): slim 2.74 s
-    vs window 4.39 s at local[8], 5.37 vs 6.97 at local[32]; the
-    verdict-suggested groupBy+join bucket stats lost every cell (its
-    join probe re-reads the fat rows the window form sorts). "window"
-    and "groupby_join" modes are kept for A/B. The SQL oracle mirrors
-    the same cap, so the capped semantic is value-checked."""
+    Two other plans lost every A/B cell and were deleted: "window"
+    (per-bucket size/rep window over the exchange, every doc's hash set
+    riding the x n_bands explode AND the bucket window sort) and
+    "groupby_join" (the verdict-suggested groupBy + join bucket stats,
+    whose join probe re-reads the fat rows the window form sorts).
+    Interleaved A/B (50k docs): slim 2.74 s vs window 4.39 s at
+    local[8], 5.37 vs 6.97 at local[32]."""
     import hashlib as _hl
-    from pyspark.sql.window import Window
     n_bands = n_hashes // band_size
     # F.get is null-safe on the empty-signature rows (empty docs), so no
     # pre-explode filter is needed — a filter on minhash/hs would be
@@ -246,168 +236,76 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, n_hashes: int = 16,
         ) for b in range(n_bands)
     ])
     empty_key = _hl.md5(b"").hexdigest()
-    if bucket_stats == "slim":
-        # Slim-shuffle form (r06, from the r05 anti-scaling root-cause):
-        # profiling attributed the regression to the band exchange + the
-        # bucket window sorting FAT rows — every doc's full shingle-hash
-        # set rides the x n_bands explode (sized_window 11.3 s of a
-        # 15.3 s total at 50k docs / 32 cores; ids-only explode 3.4 s).
-        # Here the band exchange carries (id, band, key) ONLY; pairs are
-        # generated and id-deduped as bare (id_a, id_b) rows, and the
-        # hash sets join back ONCE PER SIDE at the end, so jaccard is
-        # computed exactly once per unique candidate pair. Cost trade:
-        # the signature chain evaluates three times (band, hs_a, hs_b) —
-        # linear, vectorized scan work — in exchange for shuffling each
-        # doc's hash set at most twice (vs n_bands times). Same valve,
-        # same output values as the other modes.
-        #
-        # r07 restructure (same rows, leaner plan):
-        # - the per-bucket size/rep window is gone: ONE groupBy collects
-        #   the bare ids (m) + min id (rep) per bucket, and the
-        #   small-vs-hot split is decided on size(m) afterwards — drops
-        #   the window SORT and one full-frame pass over the exchange
-        #   (ids are at most 8 bytes/member either way, so a hot bucket
-        #   collecting k ids was already the slim form's memory shape);
-        # - the hash-set attach is pinned to BROADCAST the candidate
-        #   side: the r06 plan relied on AQE and actually broadcast the
-        #   WHOLE hs table on the second join (50k docs x ~130 hashes
-        #   ~ 50 MB; at corpus scale that side cannot broadcast at all
-        #   and would silently degrade to a sort-merge join shuffling
-        #   every hash set — exactly what slim exists to avoid). With
-        #   F.broadcast(cand) the big sides stream in place and only
-        #   the deduped near-dup pair list (+ one hash set per pair on
-        #   the second hop) is broadcast (guide §3.1/§8: move decisions,
-        #   not payloads).
-        buckets = (df.select(F.col(id_col), F.explode(bands).alias("bk"))
-                   .select(id_col, "bk.band", "bk.key")
-                   .filter(F.col("key") != empty_key)
-                   .groupBy("band", "key")
-                   .agg(F.collect_list(F.col(id_col)).alias("m"),
-                        F.min(id_col).alias("rep")))
-        n = F.size("m")
-        small_pairs = F.flatten(F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, n - 1),
-                lambda j: F.struct(
-                    F.least(F.element_at("m", (i + 1).cast("int")),
-                            F.element_at("m", (j + 1).cast("int"))
-                            ).alias("id_a"),
-                    F.greatest(F.element_at("m", (i + 1).cast("int")),
-                               F.element_at("m", (j + 1).cast("int"))
-                               ).alias("id_b")))))
-        # rep is the bucket min id, so it is always the id_a side
-        hot_pairs = F.transform(
-            F.filter("m", lambda x: x != F.col("rep")),
-            lambda h: F.struct(F.col("rep").alias("id_a"),
-                               h.alias("id_b")))
-        all_pairs = F.when(
-            n <= max_bucket,
-            F.when(n >= 2, small_pairs).otherwise(F.slice(hot_pairs, 1, 0))
-        ).otherwise(hot_pairs)
-        cand = (buckets.select(F.explode(all_pairs).alias("p"))
-                .select("p.*").distinct())
-        hs_tbl = df.select(F.col(id_col), "hs")
-        side_a = hs_tbl.select(F.col(id_col).alias("id_a"),
-                               F.col("hs").alias("_ha"))
-        side_b = hs_tbl.select(F.col(id_col).alias("id_b"),
-                               F.col("hs").alias("_hb"))
-        ab = side_a.join(F.broadcast(cand), "id_a")
-        return (side_b.join(F.broadcast(ab), "id_b")
-                .select("id_a", "id_b",
-                        (F.size(F.array_intersect("_ha", "_hb"))
-                         / F.size(F.array_union("_ha", "_hb"))
-                         ).alias("jaccard")))
-    exploded = (df.select(F.col(id_col), "hs", F.explode(bands).alias("bk"))
-                .select(id_col, "hs", "bk.band", "bk.key")
-                .filter(F.col("key") != empty_key))
-    # bucket-collect instead of a self-join: a self-join evaluates the
-    # whole upstream expression chain once per side; the window + collect
-    # below evaluate it ONCE and generate the (i < j) pairs from the
-    # collected array. The window adds bucket size + min-id rep + the
-    # rep's hash set in the SAME (band, key) exchange (full-frame
-    # aggregates are computed once per partition, and the partition
-    # buffer spills), so the hot-bucket split costs no extra shuffle
-    # and no extra upstream evaluation.
-    hot_j = (F.size(F.array_intersect("hs", "_rep_hs"))
-             / F.size(F.array_union("hs", "_rep_hs")))
-    if bucket_stats == "window":
-        wo = (Window.partitionBy("band", "key").orderBy(id_col)
-              .rowsBetween(Window.unboundedPreceding,
-                           Window.unboundedFollowing))
-        sized = exploded.select(
-            F.col(id_col), "hs", "band", "key",
-            F.count("*").over(wo).alias("_n"),
-            F.first(id_col).over(wo).alias("_rep"),
-            F.first("hs").over(wo).alias("_rep_hs"))
-    elif bucket_stats == "groupby_join":
-        # A/B alternative (r05 verdict ask #3): per-bucket stats via a
-        # plain groupBy, joined back on the same (band, key). Catalyst's
-        # ReuseExchange collapses the two identical child exchanges, so
-        # the upstream signature chain still evaluates once; the cost
-        # moved from a per-partition window SORT to a join probe.
-        stats = exploded.groupBy("band", "key").agg(
-            F.count("*").alias("_n"),
-            F.min(id_col).alias("_rep"),
-            F.min_by("hs", F.col(id_col)).alias("_rep_hs"))
-        sized = exploded.join(stats, ["band", "key"])
-    else:
-        raise ValueError(f"unknown bucket_stats mode {bucket_stats!r}")
-    # hot members verify against the rep HERE, per row — their hash
-    # arrays never enter an aggregation buffer
-    sized = sized.withColumn("_hot_j", F.when(
-        (F.col("_n") > max_bucket) & (F.col(id_col) != F.col("_rep")),
-        hot_j))
-    buckets = (sized.groupBy("band", "key").agg(
-        F.any_value("_rep").alias("rep"),
-        # when() without otherwise -> null for the other kind; collect_list
-        # skips nulls, so each bucket fills exactly one of the two arrays
-        F.collect_list(F.when(
-            F.col("_n") <= max_bucket,
-            F.struct(F.col(id_col).alias("id"), F.col("hs").alias("hs"))
-        )).alias("m"),
-        F.collect_list(F.when(
-            F.col("_hot_j").isNotNull(),
-            F.struct(F.col(id_col).alias("id"), F.col("_hot_j").alias("j"))
-        )).alias("hot")))
+    # Slim-shuffle form (r06, from the r05 anti-scaling root-cause):
+    # profiling attributed the regression to the band exchange + the
+    # bucket window sorting FAT rows — every doc's full shingle-hash
+    # set rides the x n_bands explode (sized_window 11.3 s of a
+    # 15.3 s total at 50k docs / 32 cores; ids-only explode 3.4 s).
+    # Here the band exchange carries (id, band, key) ONLY; pairs are
+    # generated and id-deduped as bare (id_a, id_b) rows, and the
+    # hash sets join back ONCE PER SIDE at the end, so jaccard is
+    # computed exactly once per unique candidate pair. Cost trade:
+    # the signature chain evaluates three times (band, hs_a, hs_b) —
+    # linear, vectorized scan work — in exchange for shuffling each
+    # doc's hash set at most twice (vs n_bands times).
+    #
+    # r07 restructure (same rows, leaner plan):
+    # - the per-bucket size/rep window is gone: ONE groupBy collects
+    #   the bare ids (m) + min id (rep) per bucket, and the
+    #   small-vs-hot split is decided on size(m) afterwards — drops
+    #   the window SORT and one full-frame pass over the exchange
+    #   (ids are at most 8 bytes/member either way, so a hot bucket
+    #   collecting k ids was already the slim form's memory shape);
+    # - the hash-set attach is pinned to BROADCAST the candidate
+    #   side: the r06 plan relied on AQE and actually broadcast the
+    #   WHOLE hs table on the second join (50k docs x ~130 hashes
+    #   ~ 50 MB; at corpus scale that side cannot broadcast at all
+    #   and would silently degrade to a sort-merge join shuffling
+    #   every hash set — exactly what slim exists to avoid). With
+    #   F.broadcast(cand) the big sides stream in place and only
+    #   the deduped near-dup pair list (+ one hash set per pair on
+    #   the second hop) is broadcast (guide §3.1/§8: move decisions,
+    #   not payloads).
+    buckets = (df.select(F.col(id_col), F.explode(bands).alias("bk"))
+               .select(id_col, "bk.band", "bk.key")
+               .filter(F.col("key") != empty_key)
+               .groupBy("band", "key")
+               .agg(F.collect_list(F.col(id_col)).alias("m"),
+                    F.min(id_col).alias("rep")))
     n = F.size("m")
-
-    def unify(x, y):
-        # verification jaccard computed AT EMISSION, inside the bucket:
-        # the downstream id-dedup exchange then carries 24-byte
-        # (id_a, id_b, j) rows instead of two full shingle-hash arrays
-        # per candidate — at 10^9 docs that is the difference between a
-        # KB-scale and a B-scale shuffle record. A pair colliding in k
-        # bands evaluates jaccard k (<= n_bands) times instead of once;
-        # near-dup pairs collide in few bands, and the arrays are
-        # already in memory here either way.
-        lo = F.when(x["id"] < y["id"], x).otherwise(y)
-        hi = F.when(x["id"] < y["id"], y).otherwise(x)
-        return F.struct(lo["id"].alias("id_a"), hi["id"].alias("id_b"),
-                        (F.size(F.array_intersect(x["hs"], y["hs"]))
-                         / F.size(F.array_union(x["hs"], y["hs"]))).alias("j"))
-
     small_pairs = F.flatten(F.transform(
         F.sequence(F.lit(0), n - 2),
         lambda i: F.transform(
             F.sequence(i + 1, n - 1),
-            lambda j: unify(F.element_at("m", (i + 1).cast("int")),
-                            F.element_at("m", (j + 1).cast("int"))))))
+            lambda j: F.struct(
+                F.least(F.element_at("m", (i + 1).cast("int")),
+                        F.element_at("m", (j + 1).cast("int"))
+                        ).alias("id_a"),
+                F.greatest(F.element_at("m", (i + 1).cast("int")),
+                           F.element_at("m", (j + 1).cast("int"))
+                           ).alias("id_b")))))
+    # rep is the bucket min id, so it is always the id_a side
     hot_pairs = F.transform(
-        "hot",
-        lambda h: F.struct(F.col("rep").alias("id_a"), h["id"].alias("id_b"),
-                           h["j"].alias("j")))
-    # sequence(0, n-2) is DESCENDING for n < 2: guard with an empty array
-    # of the unified type (slice of the always-typed hot array)
-    all_pairs = F.concat(
-        F.when(n >= 2, small_pairs).otherwise(F.slice(hot_pairs, 1, 0)),
-        hot_pairs)
-    cand = (buckets.select(F.explode(all_pairs).alias("p")).select("p.*"))
-    # dedup on ids only; every occurrence of a pair carries the same j
-    # (small-bucket and hot-star emissions both jaccard the same two
-    # hash sets), so any_value is exact
-    return (cand.groupBy("id_a", "id_b")
-            .agg(F.any_value("j").alias("jaccard")))
+        F.filter("m", lambda x: x != F.col("rep")),
+        lambda h: F.struct(F.col("rep").alias("id_a"),
+                           h.alias("id_b")))
+    all_pairs = F.when(
+        n <= max_bucket,
+        F.when(n >= 2, small_pairs).otherwise(F.slice(hot_pairs, 1, 0))
+    ).otherwise(hot_pairs)
+    cand = (buckets.select(F.explode(all_pairs).alias("p"))
+            .select("p.*").distinct())
+    hs_tbl = df.select(F.col(id_col), "hs")
+    side_a = hs_tbl.select(F.col(id_col).alias("id_a"),
+                           F.col("hs").alias("_ha"))
+    side_b = hs_tbl.select(F.col(id_col).alias("id_b"),
+                           F.col("hs").alias("_hb"))
+    ab = side_a.join(F.broadcast(cand), "id_a")
+    return (side_b.join(F.broadcast(ab), "id_b")
+            .select("id_a", "id_b",
+                    (F.size(F.array_intersect("_ha", "_hb"))
+                     / F.size(F.array_union("_ha", "_hb"))
+                     ).alias("jaccard")))
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, threshold: float = 0.5,
@@ -592,8 +490,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     radius guarantee for pairs NOT involving the rep weakens inside hot
     buckets only; the SQL oracle mirrors the same cap.
 
-    Plan shape (same linear pipeline as lsh_candidate_pairs — the
-    previous self-join evaluated the whole simhash kernel chain once per
+    Plan shape (one linear pipeline — the previous self-join evaluated the whole simhash kernel chain once per
     side): chain → window (size/rep over the same (band, key) exchange)
     → one groupBy collecting small-bucket members and hot-star
     (id, hamming) scalars side by side → one explode → id-only dedup."""

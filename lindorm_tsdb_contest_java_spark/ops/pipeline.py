@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -37,6 +38,19 @@ from ..sources.segments import (
     DEFAULT_CHUNK_US, canonicalize, decode_segments, encode_segments,
 )
 from ..sources.table import SnapshotTable
+
+# tier_latest_head layout policy: at or below this many rows (the head's,
+# or the tier's as a conservative head <= tier proxy when seeding) the
+# head is ONE sorted file rewritten whole; above it the head is
+# partitioned by conv_bucket and a narrow flush replaces only its
+# buckets. The partitioned write's fixed machinery (rebalance exchange +
+# per-bucket files + bucket collect, ~+0.3-1 s) costs more than
+# rewriting a small head outright; the two layouts measured EQUAL at
+# ~1M conversations (tools/head_scale_bench.py: 1.15 s scoped vs 1.20 s
+# full for a 2-conv flush), so the threshold sits just below that
+# crossover, and above it the single-file wall keeps growing with total
+# conversations while the scoped one stays ~flat.
+HEAD_PARTITION_MIN_ROWS = 500_000
 
 
 def _parallel_jobs(*thunks) -> None:
@@ -194,19 +208,6 @@ class RollupPipeline:
     text_level: int | None = None
     commit_batch_chunks: int | None = None  # chunks per commit; None = all in one
     fail_after_chunks: int | None = None  # test hook: simulate mid-run crash
-    # tier_latest_head layout policy: at or below this manifest size the
-    # head is maintained as a single-job full rewrite (strictly cheaper
-    # for small stores — the partitioned write's fixed machinery costs
-    # more than rewriting a few MB outright); above it the head becomes
-    # conv_bucket-partitioned and narrow flushes replace only their
-    # buckets (_update_latest_head / _merge_latest_head). The two
-    # layouts measured EQUAL at ~1M conversations
-    # (tools/head_scale_bench.py: 1.15 s scoped vs 1.20 s full for a
-    # 2-conv flush), so the threshold sits just below that indifference
-    # point — smaller heads are strictly cheaper unpartitioned, larger
-    # ones win from scoping (and the old path's wall keeps growing with
-    # total conversations while the scoped one stays ~flat).
-    head_partition_min_rows: int = 500_000
     tiers: dict = field(default_factory=lambda: {"1h": HOUR_MS, "1d": DAY_MS})
 
     def __post_init__(self):
@@ -413,9 +414,11 @@ class RollupPipeline:
         # per-chunk argmax (the existing staleness gate) until the next
         # flush heals it — exactly the per-batch crash semantics.
         if todo:
-            self._update_latest_head(
-                canon.filter(F.col("time_chunk").isin([int(c) for c in todo]))
-                .select("conv_id").distinct())
+            convs = (canon.filter(F.col("time_chunk").isin([int(c) for c in todo]))
+                     .select("conv_id").distinct())
+            self._write_latest_head(convs, lambda slots: self.table(
+                "tier_latest").read(self.spark).join(
+                    F.broadcast(convs), "conv_id", "left_semi"))
 
         if cascade:
             self.cascade()
@@ -524,7 +527,10 @@ class RollupPipeline:
                     build_latest_tier(lt_in), "time_chunk", touched,
                     sort_within=["conv_id"]),
             )
-            self._merge_latest_head(l0_latest_in)
+            self._write_latest_head(
+                l0_latest_in.select("conv_id").distinct(),
+                lambda slots: slots.unionByName(
+                    l0_latest_in.select(*slots.columns)))
             self.checkpoint.add_cascade_pending(touched)
             if cascade:
                 self.cascade()
@@ -538,171 +544,87 @@ class RollupPipeline:
         finally:
             enc.unpersist()
 
-    def _update_latest_head(self, touched_convs: DataFrame) -> None:
-        """Maintain `tier_latest_head`: ONE compacted row per
-        conversation — the reference's in-memory MapIndex.getLast slot
-        (index/MapIndex.java:99-114) materialized as a table (r05
-        verdict ask #5), so 'latest per conversation' reads O(convs)
-        rows instead of argmaxing O(convs × chunks) per-chunk winners.
+    def _write_latest_head(
+            self, convs: DataFrame,
+            candidates: Callable[[DataFrame], DataFrame]) -> None:
+        """Maintain `tier_latest_head`, the ONE writer of it: one
+        compacted row per conversation — the reference's in-memory
+        MapIndex.getLast slot (index/MapIndex.java:99-114) materialized
+        as a table (r05 verdict ask #5), so 'latest per conversation'
+        reads O(convs) rows instead of argmaxing O(convs × chunks)
+        per-chunk winners.
 
-        Untouched conversations' head rows pass through (anti-join
-        against the flush's conv set); the touched set recomputes from
-        ALL its tier_latest rows — NOT a max_by merge against the old
-        head, because a rewrite flush can supersede the very row a head
-        slot holds (the stale slot must not compete). The commit stamps
-        the tier_latest snapshot it derives from; readers treat a
-        mismatched stamp (a crash between the two commits) as stale and
-        fall back to the per-chunk argmax until the next flush heals it,
-        so the head is an accelerator, never a correctness dependency.
-        """
+        Commits `old head ⋉̸ convs ∪ winners`: untouched conversations'
+        slots pass through, and each conversation in `convs` gets the
+        max_by winner of `candidates(slots)`, where `slots` are the
+        touched conversations' current head rows. The callers differ
+        only in that function:
+        - the rewrite flush passes its tier_latest rows and ignores the
+          slots — a full recompute, because a rewrite can supersede the
+          very row a slot holds (the stale slot must not compete);
+        - the L0 append passes the slots plus its own l0-decoded rows —
+          the exact max_by merge (the eligibility probe proved nothing
+          is superseded), reading no tier_latest. Its input includes a
+          crashed flush's appended rows and the merge is idempotent, so
+          a replay repairs the head.
+        With no head yet, either caller seeds it from the whole tier.
+
+        Layout (HEAD_PARTITION_MIN_ROWS): a small unpartitioned head is
+        one sorted file; a partitioned head whose touched buckets are at
+        most half of n_buckets (the streaming micro-batch regime) reads
+        and replaces ONLY those buckets, so the flush floor stays
+        O(batch), not O(total convs); a seed or migration above the
+        threshold, or a wide batch (a hash-spread batch covers every
+        bucket, so scoping would rewrite the same rows), rewrites every
+        partition. The commit stamps the tier_latest snapshot it derives
+        from; readers treat a mismatched stamp (a crash between the two
+        commits) as stale and fall back to the per-chunk argmax until
+        the next flush heals it, so the head is an accelerator, never a
+        correctness dependency."""
         lt = self.table("tier_latest")
         snap = lt.current()
         if not snap.files:
             return
         head_tbl = self.table("tier_latest_head")
-        tier = lt.read(self.spark)
-        vcols = [c for c in tier.columns if c != "conv_id"]
-        meta = {"base_latest_snapshot": snap.snapshot_id}
         cur = head_tbl.current()
-        # r07 (r06 verdict "what's wrong" #2): once the head outgrows
-        # `head_partition_min_rows` it becomes PARTITIONED by
-        # conv_bucket, and a narrow flush (conversations in <= half the
-        # buckets — the streaming micro-batch regime) reads + replaces
-        # ONLY those bucket partitions, where the previous whole-table
-        # overwrite+vacuum made every flush O(total convs) — a floor
-        # that grows with store size and bends the O(batch) claim the
-        # L0 path exists for. The reference's getLast slot is an O(1)
-        # in-place update; this is its partitioned-table analog.
-        # BELOW the threshold the old single-job full rewrite stays: the
-        # partitioned write's fixed machinery (rebalance exchange +
-        # per-bucket files + bucket collect, measured ~+0.3-1 s) costs
-        # more than rewriting a small head outright (crossover measured
-        # at ~1M convs / ~8 MB — tools/head_scale_bench.py), and the
-        # O(total) term it avoids is by definition negligible there.
-        # Wide batches on a partitioned store do a full partition-
-        # tracked rewrite (a hash-spread batch covers every bucket, so
-        # "scoped" would rewrite the same rows anyway). Read path
-        # unchanged (same table, same stamp gate; conv-sorted row
-        # groups per file).
+        meta = {"base_latest_snapshot": snap.snapshot_id}
         partitioned = bool(cur.files) and all(
             "conv_bucket" in f.get("partition", {}) for f in cur.files)
-        # size gate: head rows (== total conversations) when a head
-        # exists, else the tier rows as a (conservative, head <= tier)
-        # proxy for the seed decision
-        big = (sum(f["rows"] for f in (cur.files or snap.files))
-               > self.head_partition_min_rows)
-        if cur.files and partitioned:
+        scope = None  # the touched buckets of a narrow partitioned write
+        if partitioned:
             bucket_of = F.pmod(F.xxhash64("conv_id"),
                                F.lit(self.n_buckets)).cast("int")
-            buckets = sorted(
-                r[0] for r in touched_convs.select(
-                    bucket_of.alias("b")).distinct().collect())
-            winners = latest_from_tier(
-                tier.join(F.broadcast(touched_convs), "conv_id",
-                          "left_semi"), None, vcols)
-            old = head_tbl.read(self.spark)
+            buckets = sorted(int(r[0]) for r in convs.select(
+                bucket_of.alias("b")).distinct().collect())
             if len(buckets) * 2 <= self.n_buckets:
-                scoped_old = (old.filter(F.col("conv_bucket").isin(buckets))
-                              .join(F.broadcast(touched_convs), "conv_id",
-                                    "left_anti"))
-                head_tbl.overwrite_partitions_multi(
-                    scoped_old.unionByName(
-                        winners.select(*scoped_old.columns)),
-                    "conv_bucket", [int(b) for b in buckets],
-                    meta=meta, sort_within=["conv_id"])
-            else:
-                head = (old.join(F.broadcast(touched_convs), "conv_id",
-                                 "left_anti")
-                        .unionByName(winners.select(*old.columns)))
-                head_tbl.overwrite_partitioned(head, "conv_bucket",
-                                               meta=meta,
-                                               sort_within=["conv_id"])
+                scope = buckets
+        if cur.files:
+            old = head_tbl.read(self.spark)
+            if scope is not None:
+                old = old.filter(F.col("conv_bucket").isin(scope))
+            slots = old.join(F.broadcast(convs), "conv_id", "left_semi")
+            winners = latest_from_tier(
+                candidates(slots), None,
+                [c for c in old.columns if c != "conv_id"])
+            head = (old.join(F.broadcast(convs), "conv_id", "left_anti")
+                    .unionByName(winners.select(*old.columns)))
         else:
-            # unpartitioned (or empty) head: full rewrite — partition-
-            # tracked above the size threshold (seed or one-time
-            # migration; later narrow flushes are then scoped), plain
-            # single-job below it (strictly cheaper for a small head)
-            if cur.files:
-                head = (head_tbl.read(self.spark)
-                        .join(F.broadcast(touched_convs), "conv_id",
-                              "left_anti")
-                        .unionByName(latest_from_tier(
-                            tier.join(F.broadcast(touched_convs),
-                                      "conv_id", "left_semi"),
-                            None, vcols)))
-            else:
-                head = latest_from_tier(tier, None, vcols)
-            if big:
-                head_tbl.overwrite_partitioned(head, "conv_bucket",
-                                               meta=meta,
-                                               sort_within=["conv_id"])
-            else:
-                head_tbl.overwrite(head.sort("conv_id"), meta=meta)
+            tier = lt.read(self.spark)
+            head = latest_from_tier(
+                tier, None, [c for c in tier.columns if c != "conv_id"])
+        if scope is not None:
+            head_tbl.overwrite_partitions_multi(
+                head, "conv_bucket", scope, meta=meta,
+                sort_within=["conv_id"])
+        elif partitioned or (sum(f["rows"] for f in (cur.files or snap.files))
+                             > HEAD_PARTITION_MIN_ROWS):
+            head_tbl.overwrite_partitioned(head, "conv_bucket", meta=meta,
+                                           sort_within=["conv_id"])
+        else:
+            head_tbl.overwrite(head.sort("conv_id"), meta=meta)
         # reclaim superseded head files (for scoped commits only the
         # touched buckets' replaced files are unreferenced), standard
         # grace window protecting concurrent readers' pinned snapshots
-        head_tbl.vacuum()
-
-    def _merge_latest_head(self, new_rows: DataFrame) -> None:
-        """Head update for the STRICTLY-EXTENDING (L0 append) path: the
-        eligibility probe proved no committed key can be superseded, so
-        the pure max_by merge of the old head with the batch's own rows
-        is exact — ONE small job (no tier_latest read), keeping the
-        per-micro-batch flush floor flat. Crash-replay safe: the input
-        is the l0-decoded row set (includes a crashed flush's appended
-        rows) and the merge is idempotent. Falls back to the full
-        recompute when no head exists yet."""
-        lt = self.table("tier_latest")
-        snap = lt.current()
-        if not snap.files:
-            return
-        head_tbl = self.table("tier_latest_head")
-        cur = head_tbl.current()
-        partitioned = bool(cur.files) and all(
-            "conv_bucket" in f.get("partition", {}) for f in cur.files)
-        big = sum(f["rows"] for f in cur.files) > self.head_partition_min_rows
-        if not cur.files:
-            # no head yet: seed via the full recompute
-            self._update_latest_head(new_rows.select("conv_id").distinct())
-            return
-        meta = {"base_latest_snapshot": snap.snapshot_id}
-        old = head_tbl.read(self.spark)
-        merge_cols = [c for c in old.columns if c != "conv_id"]
-        if partitioned:
-            # bucket-scoped merge (r07, same layout policy as
-            # _update_latest_head): a narrow micro-batch reads, merges
-            # and replaces ONLY its buckets — the flush floor stays
-            # O(batch), not O(total convs)
-            buckets = sorted(
-                r[0] for r in
-                new_rows.select("conv_bucket").distinct().collect())
-            if len(buckets) * 2 <= self.n_buckets:
-                head = old.filter(F.col("conv_bucket").isin(buckets))
-                both = head.unionByName(new_rows.select(*old.columns))
-                merged = latest_from_tier(both, None, merge_cols)
-                head_tbl.overwrite_partitions_multi(
-                    merged, "conv_bucket", [int(b) for b in buckets],
-                    meta=meta, sort_within=["conv_id"])
-            else:
-                merged = latest_from_tier(
-                    old.unionByName(new_rows.select(*old.columns)),
-                    None, merge_cols)
-                head_tbl.overwrite_partitioned(merged, "conv_bucket",
-                                               meta=meta,
-                                               sort_within=["conv_id"])
-        else:
-            merged = latest_from_tier(
-                old.unionByName(new_rows.select(*old.columns)),
-                None, merge_cols)
-            if big:
-                # crossed the size threshold: migrate to the
-                # partitioned layout with this full merge
-                head_tbl.overwrite_partitioned(merged, "conv_bucket",
-                                               meta=meta,
-                                               sort_within=["conv_id"])
-            else:
-                # small store: the single-job rewrite is cheapest
-                head_tbl.overwrite(merged.sort("conv_id"), meta=meta)
         head_tbl.vacuum()
 
     def _cascade(self) -> None:

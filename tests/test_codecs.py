@@ -109,10 +109,11 @@ def test_gorilla_constant_run_is_tiny():
     assert len(blob) <= 16 + 8 + (10_000 // 8) + 16
 
 
-def test_gorilla_decoder_reads_window_reuse_tokens():
-    # hand-build a stream with a '10' (reuse) token to pin decoder support
-    # value0 = 1.0, value1 flips one mantissa bit (lead=12, sig=1, trail=51),
-    # value2 flips it back using the '10' path with the same window.
+def test_gorilla_decoder_rejects_paper_layout_stream():
+    # a hand-built paper-layout stream (header <u64 n> <u64 total_bits>,
+    # no planes flag) with a '11' new-window and a '10' reuse token:
+    # nothing writes this layout, so the decoder refuses it rather than
+    # misparse it as planes
     v0 = struct.unpack("<Q", struct.pack("<d", 1.0))[0]
     bits = []
     def put(val, nb):
@@ -127,10 +128,11 @@ def test_gorilla_decoder_reads_window_reuse_tokens():
         if b:
             words[i >> 6] |= np.uint64(1) << np.uint64(i & 63)
     blob = struct.pack("<QQ", 3, total) + words.tobytes()
-    out = gorilla_decode(blob).view(np.uint64)
-    assert out[0] == v0
-    assert out[1] == v0 ^ (1 << 51)
-    assert out[2] == v0
+    with pytest.raises(ValueError, match="planes flag"):
+        gorilla_decode(blob)
+    # an empty paper-layout header is refused too
+    with pytest.raises(ValueError, match="planes flag"):
+        gorilla_decode(struct.pack("<QQ", 0, 0))
 
 
 # ---------- strings ----------

@@ -3,9 +3,14 @@
 conversations, then time the head update for a FIXED 50-conversation
 batch. With the bucket-scoped head (r07) the update reads/writes only
 the touched buckets, so its wall must stay ~flat as K grows 10x; the
-pre-r07 whole-table rewrite grows with K.
+pre-r07 whole-table rewrite grows with K. The update is the rewrite
+flush's head write (full recompute of the touched conversations from
+tier_latest). Above 500k conversations the head is partitioned (64
+buckets): a batch touching at most 32 buckets (e.g. 2 conversations)
+takes the scoped write, a wider one (e.g. 200) the full partitioned
+rewrite.
 
-    python tools/head_scale_bench.py [K=2000] [touched=50] [reps=5]
+    python tools/head_scale_bench.py [K=2000] [touched=50] [reps=5] [root]
 
 Prints one JSON line: {"convs": K, "touched": n, "best_s": ..,
 "samples": [..], "head_files_total": .., "head_files_rewritten": ..}.
@@ -20,6 +25,7 @@ import sys
 import time
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -36,7 +42,8 @@ def main() -> None:
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 5
     spark = get_spark("head_scale", parallelism=int(
         os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    root = f"/tmp/head_scale_{k}"
+    root = os.path.join(sys.argv[4] if len(sys.argv) > 4 else "/tmp",
+                        f"head_scale_{k}")
     shutil.rmtree(root, ignore_errors=True)
     e = eng.connect(spark, root, n_buckets=64)
     rows = [(f"hs-{c:06d}", t, "user" if t % 2 else "assistant",
@@ -56,7 +63,9 @@ def main() -> None:
     for _ in range(reps):
         before = {f["path"] for f in head_tbl.current().files}
         t0 = time.perf_counter()
-        pipe._update_latest_head(touched)
+        pipe._write_latest_head(touched, lambda slots: pipe.table(
+            "tier_latest").read(spark).join(
+                F.broadcast(touched), "conv_id", "left_semi"))
         samples.append(round(time.perf_counter() - t0, 3))
     snap = head_tbl.current()
     after = {f["path"] for f in snap.files}
