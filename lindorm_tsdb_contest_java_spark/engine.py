@@ -50,14 +50,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import queries as Q
 from .operators.tiers import (
-    DAY_MS, HOUR_MS, MINUTE_MS, build_conv_tier, build_rate_tier,
+    DAY_MS, HOUR_MS, MINUTE_MS, build_rate_tier,
     latest_from_tier, tier_percentiles,
 )
 from .ops.pipeline import RollupPipeline
 from .plans.router import classify_preds, routed_aggregate, routed_downsample
 from .sources.segments import (
     CANONICAL_COLUMNS, DEFAULT_CHUNK_US, canonicalize, chunk_range,
-    decode_segments, decoded_row_schema, time_range_from_segments, with_ts,
+    decode_segments, decoded_row_schema, segments_overlapping_minutes,
+    time_range_from_segments, with_ts,
 )
 
 # the write-API row shape (Row.java:32-46 analog)
@@ -89,7 +90,6 @@ class TranscriptTSDB:
         self.root = root
         self._buffer: list[DataFrame] = []
         self._canon_cache: DataFrame | None = None
-        self._tier_cache: DataFrame | None = None
         os.makedirs(root, exist_ok=True)
         self._raw = SnapshotTable.create(os.path.join(root, "raw"))
         # the pipeline owns the committed stores (segments + tier cascade +
@@ -141,7 +141,7 @@ class TranscriptTSDB:
         df = (rows if isinstance(rows, DataFrame)
               else self.spark.createDataFrame(pd.DataFrame(rows)))
         self._buffer.append(self._conform(df))
-        self._canon_cache = self._tier_cache = None
+        self._canon_cache = None
 
     def shutdown(self, cascade: bool = True) -> None:
         """Flush + durable commit with MEMTABLE-FLUSH cost, then retire
@@ -176,7 +176,7 @@ class TranscriptTSDB:
         the invariant on the full canonical and records it in
         flush_state.json, so disordered history permanently (and
         correctly) disables the shortcut. input_snapshot is pinned to 0:
-        fingerprints are content-addressed (count + ts bounds + key
+        fingerprints are content-addressed (count + ts bounds + row
         hash-sum + codec version) and carry across snapshots.
 
         `cascade=False` defers the 1h/1d coarse rebuild (crash-safe via
@@ -194,44 +194,31 @@ class TranscriptTSDB:
             # _conform again: raw logs written by pre-conform builds (or
             # adopted stores) may carry wider dtypes
             new_rows = self._conform(self._raw.read(self.spark))
-            has_l0 = bool(self._segments_l0.current().files)
-            if self._segments.current().files:
-                touched = self._fast_flush_chunks(new_rows)
-                if touched is not None and self._l0:
-                    # O(batch) append flush: delta segments into l0, no
-                    # base rewrite (see _append_flush)
-                    self._append_flush(new_rows, touched, cascade)
-                elif touched is not None and not has_l0:
-                    self._pipeline.run(
-                        self._fast_flush_input(new_rows, touched),
-                        input_snapshot=0, restrict_chunks=touched,
-                        cascade=cascade)
-                else:
-                    # fallback — also the COMPACTION path when l0 rows
-                    # exist (an l0-enabled store hitting an out-of-order
-                    # batch, or an l0 store reopened without the flag):
-                    # _decoded_input reads base ∪ l0, the run folds the
-                    # delta rows into the base chunk layout, and l0 is
-                    # retired after the commit
-                    full = self._decoded_input().unionByName(new_rows)
-                    # pessimistic across the crash window: anything that
-                    # dies between here and the post-run update leaves
-                    # the flag False (fast path off), never wrongly True
-                    self._set_ordered(False)
-                    m = self._pipeline.run(full, input_snapshot=0,
-                                           check_order=True, cascade=cascade)
-                    self._set_ordered(bool(m.get("per_conv_ordered")))
-                    if has_l0:
-                        self._segments_l0.truncate(meta={"reason": "compacted"})
-                        self._segments_l0.vacuum()
+            has_store = bool(self._segments.current().files)
+            touched = (self._fast_flush_chunks(new_rows) if has_store
+                       else None)
+            if touched is not None and self._l0:
+                # O(batch) append flush: delta segments into l0, no
+                # base rewrite (see _append_flush)
+                self._append_flush(new_rows, touched, cascade)
+            elif touched is not None and not self._segments_l0.current().files:
+                self._pipeline.run(
+                    self._fast_flush_input(new_rows, touched),
+                    input_snapshot=0, restrict_chunks=touched,
+                    cascade=cascade)
             else:
-                self._set_ordered(False)
-                m = self._pipeline.run(new_rows, input_snapshot=0,
-                                       check_order=True, cascade=cascade)
-                self._set_ordered(bool(m.get("per_conv_ordered")))
+                # first flush, or fallback — also the COMPACTION path when
+                # l0 rows exist (an l0-enabled store hitting an
+                # out-of-order batch, or an l0 store reopened without the
+                # flag): _decoded_input reads base ∪ l0, the run folds the
+                # delta rows into the base chunk layout, and l0 is retired
+                # after the commit
+                self._rewrite_and_retire_l0(
+                    self._decoded_input().unionByName(new_rows)
+                    if has_store else new_rows, cascade)
             self._raw.truncate(meta={"reason": "flushed"})
             self._raw.vacuum()
-        self._canon_cache = self._tier_cache = None
+        self._canon_cache = None
 
     def _append_flush(self, new_rows: DataFrame, touched: list[int],
                       cascade: bool) -> None:
@@ -290,24 +277,27 @@ class TranscriptTSDB:
         if not self._segments_l0.current().files:
             self._clear_compact_marker()  # tidy a stale marker
             return
-        self._rewrite_and_retire_l0(cascade)
+        self._rewrite_and_retire_l0(self._decoded_input(), cascade)
 
-    def _rewrite_and_retire_l0(self, cascade: bool) -> dict:
-        """The shared compaction protocol (compact / optimize_storage):
-        inflight marker → full rewrite from the decoded store → retire
-        l0 → clear marker. ONE implementation so a change to the crash
-        protocol can never land on only one of the two paths."""
-        self._set_compact_marker()
-        full = self._decoded_input()
+    def _rewrite_and_retire_l0(self, rows: DataFrame, cascade: bool) -> dict:
+        """The one full-rewrite protocol (first flush, fallback flush,
+        compact, optimize_storage), so a crash-protocol change cannot land
+        on only some paths: inflight marker when l0 has files → ordered
+        flag off (a crash before the post-run update leaves it False,
+        never wrongly True) → order-checked run over `rows` → flag from
+        the run → retire l0 → clear marker."""
+        has_l0 = bool(self._segments_l0.current().files)
+        if has_l0:
+            self._set_compact_marker()
         self._set_ordered(False)
-        m = self._pipeline.run(full, input_snapshot=0,
+        m = self._pipeline.run(rows, input_snapshot=0,
                                check_order=True, cascade=cascade)
         self._set_ordered(bool(m.get("per_conv_ordered")))
-        if self._segments_l0.current().files:
+        if has_l0:
             self._segments_l0.truncate(meta={"reason": "compacted"})
             self._segments_l0.vacuum()
-        self._clear_compact_marker()
-        self._canon_cache = self._tier_cache = None
+            self._clear_compact_marker()
+        self._canon_cache = None
         return m
 
     def _compact_marker_path(self) -> str:
@@ -360,7 +350,7 @@ class TranscriptTSDB:
                 "optimize_storage rewrites the committed store: "
                 "shutdown() the buffered batch first")
         self._pipeline.restamp_text_level(int(text_level))
-        return self._rewrite_and_retire_l0(cascade)
+        return self._rewrite_and_retire_l0(self._decoded_input(), cascade)
 
     def run_cascade(self) -> None:
         """Catch the 1h/1d coarse tiers up after deferred-cascade
@@ -582,7 +572,7 @@ class TranscriptTSDB:
         from .ops.retention import apply_retention
         out = apply_retention(self._pipeline, policy, now_us=now_us,
                               vacuum=vacuum, vacuum_grace_s=vacuum_grace_s)
-        self._canon_cache = self._tier_cache = None
+        self._canon_cache = None
         return out
 
     # ---------- read path: memtable-visible (buffered) ----------
@@ -618,11 +608,6 @@ class TranscriptTSDB:
         self._canon_cache = canon.withColumn(
             "text_len", F.col("text_len").cast("long"))
         return self._canon_cache
-
-    def _tier(self) -> DataFrame:
-        if self._tier_cache is None:
-            self._tier_cache = build_conv_tier(self._canonical(), MINUTE_MS)
-        return self._tier_cache
 
     # ---------- read path: memtable OVERLAY (buffered + committed) ----------
     #
@@ -743,13 +728,19 @@ class TranscriptTSDB:
                 and bool(self._segments.current().files))
 
     def _range_decode(self, conv_id: str, lb_ms: int, ub_ms: int,
-                      column: str) -> DataFrame:
+                      column: str, minutes: DataFrame | None = None
+                      ) -> DataFrame:
         """Rows of one conversation over [lb, ub), decoded from the
         compressed store: shard-routed, zone-map-pruned, lazy per-column
-        decode (TSFileService.java:297-447)."""
+        decode (TSFileService.java:297-447), optionally only of the
+        segments overlapping a `minutes` set inside [lb, ub)."""
+        seg = self._read_segments(self._chunks(lb_ms, ub_ms))
+        if minutes is not None:
+            seg = segments_overlapping_minutes(seg, minutes,
+                                               self._pipeline.chunk_us)
         return time_range_from_segments(
-            self._read_segments(self._chunks(lb_ms, ub_ms)), conv_id,
-            lb_ms, ub_ms, self._range_cols(column), n_buckets=self.n_buckets)
+            seg, conv_id, lb_ms, ub_ms, self._range_cols(column),
+            n_buckets=self.n_buckets)
 
     @staticmethod
     def _range_cols(column: str) -> list[str]:
@@ -774,27 +765,22 @@ class TranscriptTSDB:
             out = out.unionByName(more)
         return out
 
-    # straddle-set bound: above this many straddling buckets the engine
-    # decodes the whole range in one scan instead of a range per run —
-    # a plan-size valve, not a correctness limit
-    _STRADDLE_CAP = 512
-
     def _downsample_raw(self, tier, conv_id: str, column: str, lb_ms: int,
                         ub_ms: int, interval_ms: int,
                         filter_op: str | None, filter_value) -> DataFrame:
-        """STRADDLING-ONLY decode for the routed downsample (r03 verdict
-        ask #4): the reference decodes only the blocks the filter cuts
-        through and answers covered blocks from AggBuckets
-        (TSDBEngineImpl.java:417-439). The straddle bucket set is
-        computed from the 1m tier first (tiny: one conv's in-range
-        buckets, driver-collected like _fast_flush_chunks), its
-        classification predicates SHARED with routed_downsample
-        (plans/router.classify_preds), and only the contiguous runs of
-        straddling minutes are decoded — covered buckets' segments are
-        pruned at the parquet scan instead of decoded and dropped by the
-        join. Falls back to the full-range decode when the grid is
-        unaligned (router falls back to the plain downsample there,
-        which needs every raw row) or the straddle set exceeds the cap."""
+        """STRADDLING-ONLY decode for the routed downsample: the reference
+        decodes only the blocks the filter cuts through and answers
+        covered blocks from AggBuckets (TSDBEngineImpl.java:417-439).
+        The straddle minutes are classified from the 1m tier with the
+        predicates routed_downsample shares (plans/router.classify_preds)
+        and stay a DataFrame; only their [min, max] envelope reaches the
+        driver. One scan, bounded by that envelope's chunk range and ts
+        zone, decodes just the segments semi-joined to the straddle set
+        (segments_overlapping_minutes): covered minutes' segments are
+        never decoded, and an empty set (e.g. unfiltered queries) reads
+        no table. An unaligned grid decodes the whole range instead: the
+        router then falls back to the plain downsample, which needs every
+        raw row."""
         aligned = not ((lb_ms % MINUTE_MS) or (interval_ms % MINUTE_MS)
                       or (ub_ms - lb_ms) % interval_ms)
         if not aligned:
@@ -803,35 +789,20 @@ class TranscriptTSDB:
         vtype = decoded_row_schema([column])[column].dataType.simpleString()
         pass_all, pass_none = classify_preds(column, filter_op,
                                              filter_value, vtype)
-        rows = (tier.filter((F.col("conv_id") == conv_id)
-                            & (F.col("bucket_ms") >= lb_ms)
-                            & (F.col("bucket_ms") < ub_ms))
-                .filter(~pass_all & ~pass_none)
-                .select("bucket_ms").limit(self._STRADDLE_CAP + 1).collect())
-        if len(rows) > self._STRADDLE_CAP:
-            return self._range_decode(conv_id, lb_ms, ub_ms, column)
-        buckets = sorted(int(r["bucket_ms"]) for r in rows)
-        if not buckets:
-            # nothing straddles (e.g. unfiltered queries: every bucket is
-            # covered): an empty-but-schema-correct relation, no table
-            # read at all
+        straddle = (tier.filter((F.col("conv_id") == conv_id)
+                                & (F.col("bucket_ms") >= lb_ms)
+                                & (F.col("bucket_ms") < ub_ms))
+                    .filter(~pass_all & ~pass_none).select("bucket_ms"))
+        # one partition satisfies the global aggregate without a shuffle
+        # stage: the envelope costs one Spark job (one conversation's
+        # tier rows in range, so one task reads them)
+        lo, hi = (straddle.coalesce(1)
+                  .agg(F.min("bucket_ms"), F.max("bucket_ms")).first())
+        if lo is None:
             return self.spark.createDataFrame(
                 [], decoded_row_schema(self._range_cols(column)))
-        ranges = []  # merge adjacent minutes into contiguous decode runs
-        start = prev = buckets[0]
-        for b in buckets[1:]:
-            if b == prev + MINUTE_MS:
-                prev = b
-            else:
-                ranges.append((start, prev + MINUTE_MS))
-                start = prev = b
-        ranges.append((start, prev + MINUTE_MS))
-        parts = [self._range_decode(conv_id, lo, hi, column)
-                 for lo, hi in ranges]
-        out = parts[0]
-        for more in parts[1:]:
-            out = out.unionByName(more)
-        return out
+        return self._range_decode(conv_id, int(lo), int(hi) + MINUTE_MS,
+                                  column, straddle)
 
     # ---------- the four query types ----------
 
@@ -858,44 +829,25 @@ class TranscriptTSDB:
         buffered unflushed rows, the tier still answers for every CLEAN
         conversation; only the dirty ones (those with un-flushed rows)
         recompute exactly over their pruned committed decode ∪ buffer —
-        the memtable-overlay read, never a whole-store rescan."""
-        clean_state = not self._buffer and not self._raw.current().files
-        if clean_state and self._tier_latest.current().files:
-            cols = columns or [c for c in CANONICAL_COLUMNS if c != "conv_id"]
-            head = self._latest_head()
-            if head is not None:
-                # O(convs) read: one pre-computed row per conversation
-                # (the MapIndex.getLast slot), no argmax at all
-                if conv_ids is not None:
-                    head = head.filter(F.col("conv_id").isin(conv_ids))
-                return head.select("conv_id", *cols)
-            tier = self._tier_latest.read(self.spark)
-            return latest_from_tier(tier, conv_ids, cols)
-        if not clean_state and self._tier_latest.current().files:
-            cols = columns or [c for c in CANONICAL_COLUMNS if c != "conv_id"]
-            dirty = self._dirty_convs()
-            if conv_ids is not None:
-                dirty = dirty.filter(F.col("conv_id").isin(conv_ids))
-            head = self._latest_head()
-            if head is not None:
-                if conv_ids is not None:
-                    head = head.filter(F.col("conv_id").isin(conv_ids))
-                clean = (head.join(F.broadcast(dirty), "conv_id",
-                                   "left_anti")
-                         .select("conv_id", *cols))
-            else:
-                tier = self._tier_latest.read(self.spark)
-                if conv_ids is not None:
-                    tier = tier.filter(F.col("conv_id").isin(conv_ids))
-                clean = latest_from_tier(
-                    tier.join(F.broadcast(dirty), "conv_id", "left_anti"),
-                    None, cols)
-            # same (ts_us, turn_idx) tie-break as the tier path: the
-            # overlay rows carry every latest_from_tier input column
-            recomputed = latest_from_tier(self._overlay_rows(dirty),
-                                          None, cols)
-            return clean.unionByName(recomputed)
-        return Q.latest(self._canonical(), conv_ids, columns)
+        the memtable-overlay read, never a whole-store rescan. The
+        committed side is always _committed_latest_rows."""
+        if not self._tier_latest.current().files:
+            return Q.latest(self._canonical(), conv_ids, columns)
+        cols = columns or [c for c in CANONICAL_COLUMNS if c != "conv_id"]
+        committed = self._committed_latest_rows()
+        if conv_ids is not None:
+            committed = committed.filter(F.col("conv_id").isin(conv_ids))
+        if not self._buffer and not self._raw.current().files:
+            return committed.select("conv_id", *cols)
+        dirty = self._dirty_convs()
+        if conv_ids is not None:
+            dirty = dirty.filter(F.col("conv_id").isin(conv_ids))
+        clean = (committed.join(F.broadcast(dirty), "conv_id", "left_anti")
+                 .select("conv_id", *cols))
+        # same (ts_us, turn_idx) tie-break as the tier path: the overlay
+        # rows carry every latest_from_tier input column
+        recomputed = latest_from_tier(self._overlay_rows(dirty), None, cols)
+        return clean.unionByName(recomputed)
 
     def execute_time_range_query(self, conv_id: str, lb_ms: int, ub_ms: int,
                                  columns: list[str] | None = None) -> DataFrame:
@@ -1093,8 +1045,11 @@ class TranscriptTSDB:
         input is the dirty conversations' merged canonical rows
         (_overlay_rows: conv-zone-pruned decode ∪ buffer, upsert dedup +
         exact latency) ∪ the SAME buckets' committed rows of the CLEAN
-        conversations — a ts-zone-pruned decode of role/tool/ts/latency
-        only, no text blobs."""
+        conversations — role/tool/ts/latency only, no text blobs, decoded
+        from just the segments that overlap a touched minute: the
+        touched set's envelope and time chunks are pushed to the scan and
+        the minute set itself is a broadcast semi-join
+        (segments_overlapping_minutes)."""
         committed_tbl = self._pipeline.table("tier_rate_1m")
         if not (self._segments.current().files
                 and committed_tbl.current().files):
@@ -1135,10 +1090,9 @@ class TranscriptTSDB:
         o_sig, n_sig = _bucket_sig(old), _bucket_sig(merged)
         # distinct changed minute buckets: bounded by the dirty convs'
         # time span in minutes, not their row count. The driver collect
-        # is CAPPED (straddle-set convention): a changed set spanning
-        # more than 8192 distinct minutes keeps the bucket set as a
-        # DataFrame (semi-joins stay exact) and prunes the scan with
-        # just its [min, max] envelope — never an unbounded driver list.
+        # is CAPPED: a changed set spanning more than 8192 distinct
+        # minutes stays a DataFrame and only its envelope and chunk set
+        # are collected — never an unbounded driver list.
         touched_df = (o_sig.withColumnsRenamed({"_n": "_on", "_s": "_os"})
                       .join(n_sig, "bucket_ms", "full")
                       .filter(~(F.col("_on").eqNullSafe(F.col("_n"))
@@ -1147,34 +1101,29 @@ class TranscriptTSDB:
         capped = touched_df.limit(8193).collect()
         if not capped:
             return committed_tbl.read(self.spark).select(*self._RATE_COLS)
+        chunk_us = self._pipeline.chunk_us
         if len(capped) > 8192:
-            env = touched_df.agg(F.min("bucket_ms"), F.max("bucket_ms")) \
-                .collect()[0]
-            runs = [[int(env[0]), int(env[1]) + MINUTE_MS]]
+            lo, hi, chunks = touched_df.agg(
+                F.min("bucket_ms"), F.max("bucket_ms"),
+                F.collect_set(F.floor(F.col("bucket_ms") * 1000
+                                      / F.lit(chunk_us)))).first()
             tb = touched_df
         else:
-            touched = sorted(int(r[0]) for r in capped)
-            # contiguous minute runs → ts-zone scan predicate for the
-            # clean side's decode (capped like the downsample straddle
-            # set; over the cap one [lo, hi] envelope still prunes, and
-            # the exact bucket semi-join below keeps the answer exact)
-            runs = []
-            for b in touched:
-                if runs and b == runs[-1][1]:
-                    runs[-1][1] = b + MINUTE_MS
-                else:
-                    runs.append([b, b + MINUTE_MS])
-            if len(runs) > 512:
-                runs = [[touched[0], touched[-1] + MINUTE_MS]]
+            touched = [int(r[0]) for r in capped]
+            lo, hi = min(touched), max(touched)
+            chunks = {b * 1000 // chunk_us for b in touched}
             tb = self.spark.createDataFrame(
                 [(b,) for b in touched], "bucket_ms long")
-        zone = None
-        for lo, hi in runs:
-            p = ((F.col("min_ts_us") < F.lit(hi * 1000))
-                 & (F.col("max_ts_us") >= F.lit(lo * 1000)))
-            zone = p if zone is None else (zone | p)
+        lo, hi = int(lo), int(hi) + MINUTE_MS
+        # the clean side decodes only segments overlapping a touched
+        # minute: envelope + chunk set pushed to the scan, the exact
+        # minute set as a broadcast semi-join
+        seg = self._read_segments(self._chunks(lo, hi)).filter(
+            (F.col("min_ts_us") < F.lit(hi * 1000))
+            & (F.col("max_ts_us") >= F.lit(lo * 1000))
+            & F.col("time_chunk").isin(sorted(int(c) for c in chunks)))
         clean = (decode_segments(
-                     self._read_segments().filter(zone),
+                     segments_overlapping_minutes(seg, tb, chunk_us),
                      ["conv_id", "role", "tool", "ts_us", "latency_s"])
                  .join(F.broadcast(dirty), "conv_id", "left_anti")
                  .withColumn("bucket_ms",

@@ -221,26 +221,8 @@ def text_encode(values, level: int = 3, ext_lengths=None) -> bytes:
     return best
 
 
-def _text_decode_body(n: int, payload: bytes) -> np.ndarray:
-    lens_blob, data = unpack_sections(payload, 2)
-    lengths = varint_decode(lens_blob, n).astype(np.int32)
-    offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(lengths, out=offsets[1:])
-    arr = pa.StringArray.from_buffers(
-        n, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)
-    )
-    return arr.to_numpy(zero_copy_only=False)
-
-
 def text_decode(blob: bytes, lengths=None) -> np.ndarray:
-    mode, n = _HDR.unpack_from(blob, 0)
-    if mode in (_MODE_EXTLEN, _MODE_EXTLEN_DELTA, _MODE_TOKENS):
-        return text_decode_arrow(blob, lengths).to_numpy(zero_copy_only=False)
-    if mode != _MODE_RAW:
-        raise ValueError(f"not a text stream (mode {mode})")
-    if n == 0:
-        return np.zeros(0, dtype=object)
-    return _text_decode_body(n, zstd_decompress(blob[_HDR.size :]))
+    return text_decode_arrow(blob, lengths).to_numpy(zero_copy_only=False)
 
 
 def _text_decode_arrow_body(n: int, payload: bytes) -> pa.Array:
@@ -347,21 +329,4 @@ def dict_encode(values, level: int = 3, max_card_frac: float = 0.5) -> bytes:
 
 
 def dict_decode(blob: bytes) -> np.ndarray:
-    mode, n = _HDR.unpack_from(blob, 0)
-    if mode == _MODE_RAW:
-        return text_decode(blob)
-    if mode != _MODE_DICT:
-        raise ValueError(f"unknown string codec mode {mode}")
-    if n == 0:
-        return np.zeros(0, dtype=object)
-    payload = zstd_decompress(blob[_HDR.size :])
-    hdr_blob, lens_blob, data, codes_blob = unpack_sections(payload, 4)
-    n_uniq, pack_w = (int(x) for x in varint_decode(hdr_blob, 2))
-    lengths = varint_decode(lens_blob, n_uniq).astype(np.int32)
-    offsets = np.zeros(n_uniq + 1, dtype=np.int32)
-    np.cumsum(lengths, out=offsets[1:])
-    uniques = pa.StringArray.from_buffers(
-        n_uniq, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)
-    ).to_numpy(zero_copy_only=False)
-    codes = _decode_dict_codes(codes_blob, n, pack_w)
-    return uniques[codes]
+    return dict_decode_arrow(blob).to_numpy(zero_copy_only=False)

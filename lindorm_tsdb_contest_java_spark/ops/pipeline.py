@@ -372,16 +372,19 @@ class RollupPipeline:
 
     def _run_chunks(self, canon: DataFrame, input_snapshot: int,
                     cascade: bool = True) -> dict:
-        # per-chunk content fingerprint (count + ts bounds + key hash-sum):
+        # per-chunk content fingerprint (count + ts bounds + row hash-sum):
         # incremental processing redoes exactly the chunks whose content
         # changed since the checkpoint — new data appended into an old
-        # chunk invalidates only that chunk, not the whole run
+        # chunk invalidates only that chunk, not the whole run. The hash
+        # covers the row content, not just the key: a same-ts upsert that
+        # wins on content (text_len tie-break) still invalidates its chunk
         fp_rows = (canon.groupBy("time_chunk").agg(
             F.count("*").alias("n"), F.max("ts_us").alias("mx"),
-            F.sum(F.xxhash64("conv_id", "turn_idx", "ts_us").cast("decimal(38,0)"))
+            F.sum(F.xxhash64("conv_id", "turn_idx", "ts_us", "role", "tool",
+                             "text").cast("decimal(38,0)"))
              .alias("h"),  # decimal sum: immune to ANSI long overflow
         ).collect())
-        # fingerprint = content (count + ts bounds + key hash-sum) PLUS the
+        # fingerprint = content (count + ts bounds + row hash-sum) PLUS the
         # codec wire version (a format bump invalidates every chunk, so
         # stale blobs are re-encoded, never misparsed — ADVICE r02) PLUS
         # the stamped text level (restamp_text_level then re-encodes the

@@ -17,10 +17,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 @dataclass
 class PlanFacts:
     plan: str
@@ -37,10 +33,6 @@ class PlanFacts:
     @property
     def has_broadcast_join(self) -> bool:
         return "BroadcastHashJoin" in self.plan or "BroadcastNestedLoopJoin" in self.plan
-
-    @property
-    def has_codegen(self) -> bool:
-        return "WholeStageCodegen" in self.plan
 
     def pushed_filters(self) -> list[str]:
         return [l.strip() for l in self.plan.splitlines() if "PushedFilters" in l]

@@ -40,8 +40,8 @@ from pyspark.sql.types import (
 )
 
 from ..functions.codecs import (
-    dict_decode, dict_encode, int_decode, int_encode,
-    latency_decode, latency_encode, text_decode, text_encode,
+    dict_encode, int_decode, int_encode, latency_decode, latency_encode,
+    text_encode,
 )
 from ..functions.codecs.strings import (
     TEXT_MODE_EXTLEN, TEXT_MODE_EXTLEN_DELTA, dict_decode_arrow,
@@ -470,6 +470,25 @@ def decode_segments(segments: DataFrame, columns: list[str] | None = None) -> Da
 def with_ts(decoded: DataFrame) -> DataFrame:
     """Reattach a TimestampType view of ts_us."""
     return decoded.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+
+
+_MINUTE_US = 60 * 1_000_000  # the 1m tier grid
+
+
+def segments_overlapping_minutes(segments: DataFrame, minutes: DataFrame,
+                                 chunk_us: int) -> DataFrame:
+    """The segments whose ts zone overlaps some minute of `minutes` (a
+    small DataFrame with a `bucket_ms` column): a broadcast left-semi
+    join keyed on the minute's time_chunk — exact, since chunk_us is a
+    whole number of minutes (RollupPipeline validates it) — with the
+    zone overlap as the join condition."""
+    m_us = F.col("bucket_ms") * 1000
+    return segments.join(
+        F.broadcast(minutes.select("bucket_ms")),
+        (F.col("time_chunk") == F.floor(m_us / F.lit(chunk_us)))
+        & (F.col("min_ts_us") < m_us + F.lit(_MINUTE_US))
+        & (F.col("max_ts_us") >= m_us),
+        "left_semi")
 
 
 def time_range_from_segments(

@@ -212,11 +212,6 @@ class SnapshotTable:
         _SCHEMAS[(self.root, merge_schema)] = (ident, schema)
         return schema
 
-    def read_pandas(self):
-        import pandas as pd
-        paths = self.file_paths()
-        return pd.concat([pq.read_table(p).to_pandas() for p in paths], ignore_index=True)
-
     # ---------- writes ----------
 
     def append(self, source, meta: dict | None = None) -> Snapshot:
@@ -360,9 +355,6 @@ class SnapshotTable:
         finally:
             os.close(fd)
             os.unlink(lock)
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
 
     # ---------- internals ----------
 

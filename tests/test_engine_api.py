@@ -105,6 +105,32 @@ def test_upsert_overwrite_through_api(spark, tmp_path):
     assert list(got2["text"]) == ["a", "b-edited", "c"]
 
 
+def test_same_ts_upsert_of_committed_key_survives_flush(spark, tmp_path):
+    """An upsert of a COMMITTED key at the same ts that wins on content
+    (canonicalize keeps the longer text on a ts tie) must reach the
+    store: the chunk fingerprint hashes row content, not just the key,
+    so the flush re-encodes the chunk instead of skipping it."""
+    db = eng.connect(spark, str(tmp_path / "samets"), n_buckets=4)
+    base = pd.DataFrame({
+        "conv_id": ["c1"] * 3, "turn_idx": np.array([0, 1, 2], dtype=np.int32),
+        "role": ["user"] * 3, "text": ["a", "b", "c"], "tool": [""] * 3,
+        "ts": pd.to_datetime([1_700_000_000_000_000 + i * 1_000_000 for i in range(3)],
+                             unit="us"),
+    })
+    db.write(spark.createDataFrame(base))
+    db.shutdown()
+    db.write(spark.createDataFrame(
+        base.iloc[[1]].assign(role="assistant", text="b-edited")))
+    answers = []
+    for _ in range(2):  # buffered, then flushed
+        answers.append(sorted(map(str, db.execute_time_range_query(
+            "c1", 0, 2_000_000_000_000, ["turn_idx", "role", "text"])
+            .collect())))
+        db.shutdown()
+    assert answers[0] == answers[1]
+    assert "text='b-edited'" in answers[1][1] and "assistant" in answers[1][1]
+
+
 def test_latest_served_from_tier_after_shutdown(spark, db, oracle_pdf):
     """Post-flush, execute_latest_query must read the materialized latest
     tier (MapIndex.getLast analog), not scan the raw table — and still
@@ -319,6 +345,45 @@ def test_downsample_decodes_only_straddling_buckets(spark, tmp_path):
     assert str(straddle_hi_us) in plan, plan
     assert str(full_ub_us) not in plan, \
         "decode scan still bounded by the full range"
+
+
+def test_downsample_many_straddling_minutes_decode_envelope(spark, tmp_path):
+    """More than 512 straddling minutes, spread one per run inside a
+    sub-range of [lb, ub): the committed downsample must equal the
+    buffered twin, and its decode scan is bounded by the straddle
+    envelope — never widened to the full range."""
+    base_s = 1_704_067_200  # minute-aligned
+    rows = []
+    n_straddle = 530
+    for k in range(n_straddle):
+        m = 100 + 2 * k  # a straddling minute, then a covered one
+        rows.append(("c-many", 4 * k, "user", "x" * 20, "-",
+                     pd.Timestamp((base_s + m * 60) * 10**9)))
+        rows.append(("c-many", 4 * k + 1, "user", "x" * 5, "-",
+                     pd.Timestamp((base_s + m * 60 + 30) * 10**9)))
+        for i in range(2):
+            rows.append(("c-many", 4 * k + 2 + i, "user", "x" * 20, "-",
+                         pd.Timestamp((base_s + (m + 1) * 60 + 20 * i)
+                                      * 10**9)))
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role",
+                                      "text", "tool", "ts"])
+    e = eng.connect(spark, str(tmp_path / "many"), n_buckets=4)
+    e.write(spark.createDataFrame(pdf))
+    e.shutdown()
+    lb = base_s * 1000
+    ub = lb + 1440 * 60_000
+    got = e.execute_downsample_query("c-many", "text_len", lb, ub,
+                                     3_600_000, "AVG", "GREATER", 10)
+    twin = eng.connect(spark, str(tmp_path / "many-oracle"), n_buckets=4)
+    twin.write(spark.createDataFrame(pdf))
+    exp = twin.execute_downsample_query("c-many", "text_len", lb, ub,
+                                        3_600_000, "AVG", "GREATER", 10)
+    assert sorted(map(str, got.collect())) == sorted(map(str, exp.collect()))
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    envelope_hi_us = (lb + (100 + 2 * (n_straddle - 1) + 1) * 60_000) * 1000
+    assert str(envelope_hi_us) in plan, plan
+    assert str(ub * 1000) not in plan, \
+        "decode scan widened to the full range"
 
 
 def test_downsample_unfiltered_needs_no_decode(spark, tmp_path):

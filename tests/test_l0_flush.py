@@ -114,7 +114,7 @@ def test_l0_replay_is_idempotent(pair, spark):
     a._append_flush(nr, touched, cascade=True)
     after = a._segments_l0.read(spark).agg(F.sum("n_rows")).collect()[0][0]
     assert after == before, "replayed keys were re-appended"
-    a._canon_cache = a._tier_cache = None
+    a._canon_cache = None
     assert _queries(a, lb, ub) == _queries(b, lb, ub)
 
 
