@@ -959,8 +959,7 @@ class TranscriptTSDB:
             out = out.filter(F.col("tool") == tool)
         return out
 
-    _RATE_COLS = ("role", "tool", "bucket_ms", "n_turns",
-                  "latency_sum", "latency_digest")
+    _RATE_COLS = ("role", "tool", "bucket_ms", "n_turns", "latency_digest")
 
     def _percentile_cover(self, lb_ms: int, ub_ms: int) -> list[tuple]:
         """[(tier_name, lo, hi)] partitioning [lb, ub) so each piece is

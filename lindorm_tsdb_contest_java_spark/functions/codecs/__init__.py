@@ -50,12 +50,15 @@ no reader at all).
 #      envelope) — the transcript-aware word-redundancy lever, adopted
 #      per block only when byte-for-byte shorter than the best
 #      length-framed stream
-CODEC_VERSION = 10
+#  v11: no blob layout change; the tier and segment-stat schemas store the
+#      latency sum as int64 micros (latency_sum double -> latency_us_sum),
+#      so a v10 store would mix two tier schemas in one table
+CODEC_VERSION = 11
 
 from .varint import (
     zigzag_encode, zigzag_decode, varint_encode, varint_decode, varint_size,
 )
-from .dod import dod_encode, dod_decode, int_encode, int_decode
+from .dod import int_encode, int_decode
 from .gorilla import gorilla_encode, gorilla_decode
 from .floats import (
     float_encode, float_decode, latency_encode, latency_decode,
@@ -67,7 +70,7 @@ __all__ = [
     "CODEC_VERSION",
     "zigzag_encode", "zigzag_decode", "varint_encode", "varint_decode",
     "varint_size",
-    "dod_encode", "dod_decode", "int_encode", "int_decode",
+    "int_encode", "int_decode",
     "gorilla_encode", "gorilla_decode",
     "float_encode", "float_decode", "latency_encode", "latency_decode",
     "dict_encode", "dict_decode", "text_encode", "text_decode",

@@ -1,4 +1,4 @@
-"""Int64 column codecs: delta-of-delta, and a best-of-N chooser.
+"""Int64 column codec: a best-of-N chooser over delta-of-delta and friends.
 
 Capability analog of the reference's timestamp codec
 (`compress/LongCompress.java:13-30`: sorted deltas + Simple-8b), its
@@ -7,20 +7,17 @@ per-column codec-choice bitmap (`compress/IntCompress.java:1178-1297`:
 each column records which of several encodings won), per the target
 spec ("delta-of-delta + ZigZag varint for timestamps/turn_idx").
 
-`dod_encode`/`dod_decode` — the fixed delta-of-delta stream:
-  <u64le n> [<i64le first> <zstd(varint zigzag(d0), zigzag(dod_1..))>]
-The zstd-3 envelope collapses the long zero runs a regular grid produces
-(the reference gets the same effect from Simple-8b's 240-zeros-per-word
-selector plus its own zstd envelope). Arithmetic is mod 2^64 on both
-sides, so round-trip is exact even for adversarial full-range inputs.
-
 `int_encode`/`int_decode` — per-block best-of-N with a header byte:
 ranks {dod, plain-delta, raw-zigzag, sorted-dictionary} by their exact
 pre-zstd varint size (computed vectorized WITHOUT encoding all four) and
-encodes only the winner. Timestamps keep choosing dod; a non-monotonic
-column like text_len — whose delta-of-deltas are LARGER than its deltas —
-gets plain delta, raw, or the dictionary instead of paying dod's
-inflation. Wire: <u8 mode> <u64le n> <mode payload>.
+encodes only the winner. The zstd-3 envelope collapses the long zero
+runs a regular grid's dod stream produces (the reference gets the same
+effect from Simple-8b's 240-zeros-per-word selector plus its own zstd
+envelope). Timestamps keep choosing dod; a non-monotonic column like
+text_len — whose delta-of-deltas are LARGER than its deltas — gets plain
+delta, raw, or the dictionary instead of paying dod's inflation.
+Arithmetic is mod 2^64 on both sides, so round-trip is exact even for
+adversarial full-range inputs. Wire: <u8 mode> <u64le n> <mode payload>.
 """
 
 from __future__ import annotations
@@ -40,36 +37,6 @@ from .varint import (
 
 _HDR = struct.Struct("<Q")
 _I64 = struct.Struct("<q")
-
-
-def dod_encode(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.int64)
-    n = v.size
-    if n == 0:
-        return _HDR.pack(0)
-    head = _HDR.pack(n) + _I64.pack(int(v[0]))
-    if n == 1:
-        return head
-    deltas = np.diff(v)
-    stream = np.empty(n - 1, dtype=np.int64)
-    stream[0] = deltas[0]
-    np.subtract(deltas[1:], deltas[:-1], out=stream[1:])
-    return head + zstd_compress(varint_encode(zigzag_encode(stream)))
-
-
-def dod_decode(blob: bytes) -> np.ndarray:
-    (n,) = _HDR.unpack_from(blob, 0)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    (first,) = _I64.unpack_from(blob, 8)
-    if n == 1:
-        return np.array([first], dtype=np.int64)
-    dod = zigzag_decode(varint_decode(zstd_decompress(blob[16:]), n - 1))
-    deltas = np.cumsum(dod)  # wraps mod 2^64, mirroring encode
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    np.add(first, np.cumsum(deltas), out=out[1:])
-    return out
 
 
 # ---------- best-of-N int codec with a mode header byte ----------
@@ -272,8 +239,7 @@ def int_decode(blob: bytes) -> np.ndarray:
         # CODEC_VERSION-salted fingerprints.
         raise ValueError(
             f"unknown int codec mode {mode}: not an int_encode blob "
-            "(legacy dod_encode streams must be decoded with dod_decode; "
-            "re-encode segments written by an older codec version)")
+            "(re-encode segments written by an older codec version)")
     (n,) = _HDR.unpack_from(blob, 1)
     if n == 0:
         return np.zeros(0, dtype=np.int64)

@@ -6,11 +6,14 @@ rolled up 100-at-a-time into `BigBucket` (index/MapIndex.java:231-248).
 Here each tier is an ordinary table produced by one hash aggregate, and
 the cascade composes exactly because every tier carries only
 **decomposable** aggregates: count, sum, min, max (+ mergeable t-digest
-blobs for latency percentiles). AVG is derived from (sum, count) at read
-time, never averaged across tiers (the float-exactness rule from
-SURVEY.md §7.4). Note: we do NOT reproduce the reference's BigBucket
-min-merge bug (BigBucket.java:91 uses Math.max for iMin — dead code there,
-wrong here).
+blobs for latency percentiles). Every stored sum is an int64 — latency
+is summed as whole micros (`latency_us_sum`) — so a tier row is
+bit-identical however Spark partitioned or ordered its inputs, and the
+cascade equals the direct build bit for bit. AVG is derived from
+(sum, count) at read time, never averaged across tiers (the
+float-exactness rule from SURVEY.md §7.4). Note: we do NOT reproduce
+the reference's BigBucket min-merge bug (BigBucket.java:91 uses
+Math.max for iMin — dead code there, wrong here).
 
 Two tier families:
 - conv tiers  : key (conv_id, bucket_ms)      — accelerate per-conversation
@@ -26,7 +29,7 @@ semantics (TSDBEngineImpl.java:420-426,664-666) generalized.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.tdigest import tdigest_build, tdigest_merge, tdigest_quantile
@@ -37,13 +40,23 @@ DAY_MS = 86_400_000
 
 TIER_WIDTHS_MS = {"1m": MINUTE_MS, "1h": HOUR_MS, "1d": DAY_MS}
 
+LATENCY_SCALE = 1e6  # latency_s is a whole number of micros / 1e6
+
+
+def latency_us(latency_s: Column) -> Column:
+    """latency_s as exact int64 micros: canonicalize derives every
+    latency_s as a ts_us lag / 1e6 (sources/segments.py), so the scaled
+    value is within an ulp of an integer and the round recovers it."""
+    return F.round(latency_s * F.lit(LATENCY_SCALE)).cast("long")
+
+
 def _measures():
     return [
         F.count("*").alias("n_turns"),
         F.sum("text_len").alias("text_len_sum"),
         F.min("text_len").alias("text_len_min"),
         F.max("text_len").alias("text_len_max"),
-        F.sum("latency_s").alias("latency_sum"),
+        F.sum(latency_us(F.col("latency_s"))).alias("latency_us_sum"),
         F.min("latency_s").alias("latency_min"),
         F.max("latency_s").alias("latency_max"),
     ]
@@ -55,7 +68,7 @@ def _rollup_measures():
         F.sum("text_len_sum").alias("text_len_sum"),
         F.min("text_len_min").alias("text_len_min"),
         F.max("text_len_max").alias("text_len_max"),
-        F.sum("latency_sum").alias("latency_sum"),
+        F.sum("latency_us_sum").alias("latency_us_sum"),
         F.min("latency_min").alias("latency_min"),
         F.max("latency_max").alias("latency_max"),
     ]
@@ -69,30 +82,25 @@ def _bucket(width_ms: int, src_col: str = "ts_us") -> F.Column:
 def build_conv_tier(canonical: DataFrame, width_ms: int = MINUTE_MS) -> DataFrame:
     """Base tier from raw turns: one hash aggregate, map-side partials free.
 
-    When the source carries latency as exact integer micros (latency_us),
-    the tier also stores latency_us_sum — an int64 that composes
+    Latency is summed as int64 micros (latency_us_sum), so the row is
+    the same whatever order the partials were added in, and it composes
     bit-exactly through every cascade level and across engines."""
-    measures = _measures()
-    if "latency_us" in canonical.columns:
-        measures.append(F.sum("latency_us").alias("latency_us_sum"))
-    return canonical.groupBy("conv_id", _bucket(width_ms)).agg(*measures)
+    return canonical.groupBy("conv_id", _bucket(width_ms)).agg(*_measures())
 
 
 def rollup_conv_tier(tier: DataFrame, width_ms: int) -> DataFrame:
     """Next retention tier from the previous one — same-shaped schema, so
     the cascade composes (1m → 1h → 1d)."""
-    measures = _rollup_measures()
-    if "latency_us_sum" in tier.columns:
-        measures.append(F.sum("latency_us_sum").alias("latency_us_sum"))
     coarse = (F.floor(F.col("bucket_ms") / F.lit(width_ms)) * F.lit(width_ms)).alias("bucket_ms")
-    return tier.groupBy("conv_id", coarse).agg(*measures)
+    return tier.groupBy("conv_id", coarse).agg(*_rollup_measures())
 
 
 def with_avg(tier: DataFrame) -> DataFrame:
     """Read-time derived averages (never stored, never averaged-of-averaged)."""
     return tier.withColumn(
         "text_len_avg", (F.col("text_len_sum") / F.col("n_turns")).cast("double")
-    ).withColumn("latency_avg", (F.col("latency_sum") / F.col("n_turns")).cast("double"))
+    ).withColumn("latency_avg", F.col("latency_us_sum") / F.col("n_turns")
+                 / F.lit(LATENCY_SCALE))
 
 
 def build_latest_tier(canonical: DataFrame) -> DataFrame:
@@ -132,13 +140,13 @@ def latest_from_tier(tier: DataFrame, conv_ids: list[str] | None = None,
 
 _RATE_TIER_SCHEMA = (
     "role string, tool string, bucket_ms bigint, n_turns bigint, "
-    "latency_sum double, latency_digest binary"
+    "latency_digest binary"
 )
 
 
 def build_rate_tier(canonical: DataFrame, width_ms: int = MINUTE_MS,
                     buckets_per_group: int = 256) -> DataFrame:
-    """Sums + t-digest per (role, tool, bucket) in one shuffle (a
+    """Count + t-digest per (role, tool, bucket) in one shuffle (a
     grouped-agg pandas UDF cannot mix with JVM aggregates in one agg).
 
     Grouping is by (role, tool, COARSE window of buckets_per_group
@@ -160,12 +168,10 @@ def build_rate_tier(canonical: DataFrame, width_ms: int = MINUTE_MS,
         lat = pdf["latency_s"].to_numpy(np.float64)[order]
         starts = np.r_[0, np.flatnonzero(np.diff(b)) + 1]
         ends = np.r_[starts[1:], len(b)]
-        sums = np.add.reduceat(lat, starts)
         return pd.DataFrame({
             "role": key[0], "tool": key[1],
             "bucket_ms": b[starts],
             "n_turns": (ends - starts).astype(np.int64),
-            "latency_sum": sums,
             "latency_digest": [tdigest_build(lat[s:e])
                                for s, e in zip(starts, ends)],
         })
@@ -197,8 +203,6 @@ def rollup_rate_tier(tier: DataFrame, width_ms: int,
             "role": key[0], "tool": key[1],
             "bucket_ms": b[starts],
             "n_turns": np.add.reduceat(pdf["n_turns"].to_numpy(np.int64), starts),
-            "latency_sum": np.add.reduceat(
-                pdf["latency_sum"].to_numpy(np.float64), starts),
             "latency_digest": [
                 tdigest_merge([bytes(x) for x in blobs[s:e]])
                 for s, e in zip(starts, ends)],

@@ -16,24 +16,37 @@ does exactly the reference's split, declaratively:
 Both parts are DataFrames unioned before one final aggregate, so the
 whole thing stays a single lazy plan (no driver-side branching on data).
 AVG composes from (sum, count); MAX from max — the decomposability rule
-the tiers were designed around.
+the tiers were designed around. Sums are int64 on both sides, in the
+tier's unit for the column (characters for text_len, micros for
+latency_s), and AVG divides once at the end, so the answer does not
+depend on how Spark partitioned the rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.tiers import MINUTE_MS
+from ..operators.tiers import LATENCY_SCALE, MINUTE_MS, latency_us
 
+# column -> (its int64 tier sum, its max, units of that sum per value)
 _TIER_COLS = {
-    "text_len": ("text_len_sum", "text_len_max"),
-    "latency_s": ("latency_sum", "latency_max"),
+    "text_len": ("text_len_sum", "text_len_max", 1),
+    "latency_s": ("latency_us_sum", "latency_max", LATENCY_SCALE),
 }
 
 _TIER_MINMAX = {
     "text_len": ("text_len_min", "text_len_max"),
     "latency_s": ("latency_min", "latency_max"),
 }
+
+
+def _in_sum_units(column: str, value: Column) -> Column:
+    """A raw value in the int64 unit its tier sum is kept in."""
+    return latency_us(value) if column == "latency_s" else value.cast("long")
+
+
+def _avg(column: str) -> Column:
+    return F.sum("_sum") / F.sum("_cnt") / F.lit(_TIER_COLS[column][2])
 
 
 def routed_aggregate(
@@ -48,10 +61,10 @@ def routed_aggregate(
 ) -> DataFrame:
     """Tier-accelerated single-bucket AVG/MAX with reference semantics
     (result ts = lb, AVG -> double, MAX keeps the column's native type —
-    TSDBEngineImpl.java:308-377 — empty range -> empty result). Only the
-    AVG sums are cast to double; MAX values flow through untouched so the
-    result schema is independent of whether the tier served the query."""
-    sum_col, max_col = _TIER_COLS[column]
+    TSDBEngineImpl.java:308-377 — empty range -> empty result). MAX
+    values flow through untouched so the result schema is independent of
+    whether the tier served the query."""
+    sum_col, max_col, _ = _TIER_COLS[column]
     vtype = dict(raw.dtypes)[column]
     lo = -(-lb_ms // tier_width_ms) * tier_width_ms   # ceil to tier grid
     hi = (ub_ms // tier_width_ms) * tier_width_ms     # floor to tier grid
@@ -61,7 +74,7 @@ def routed_aggregate(
         interior = (
             tier_1m.filter((F.col("conv_id") == conv_id)
                            & (F.col("bucket_ms") >= lo) & (F.col("bucket_ms") < hi))
-            .select(F.col(sum_col).cast("double").alias("_sum"),
+            .select(F.col(sum_col).alias("_sum"),
                     F.col("n_turns").alias("_cnt"),
                     F.col(max_col).cast(vtype).alias("_max"))
         )
@@ -73,7 +86,7 @@ def routed_aggregate(
 
     edges = (
         raw.filter((F.col("conv_id") == conv_id) & edge_pred)
-        .agg(F.sum(F.col(column).cast("double")).alias("_sum"),
+        .agg(F.sum(_in_sum_units(column, F.col(column))).alias("_sum"),
              F.count(column).alias("_cnt"),
              F.max(column).cast(vtype).alias("_max"))
         .filter(F.col("_cnt") > 0)
@@ -81,7 +94,7 @@ def routed_aggregate(
     parts = edges.unionByName(interior) if interior is not None else edges
 
     if agg == "AVG":
-        value = (F.sum("_sum") / F.sum("_cnt")).cast("double")
+        value = _avg(column)
     elif agg == "MAX":
         value = F.max("_max")
     else:
@@ -158,7 +171,7 @@ def routed_downsample(
                             sentinel_as_null=sentinel_as_null)
     n_windows = (ub_ms - lb_ms) // interval_ms
     spark = raw.sparkSession
-    sum_col, _ = _TIER_COLS[column]
+    sum_col = _TIER_COLS[column][0]
     min_col, max_col = _TIER_MINMAX[column]
     vtype = dict(raw.dtypes)[column]
     int_col = vtype in ("int", "bigint", "smallint", "tinyint")
@@ -171,7 +184,7 @@ def routed_downsample(
     w_of_bucket = F.floor((F.col("bucket_ms") - F.lit(lb_ms)) / F.lit(interval_ms))
     covered = (buckets.filter(pass_all)
                .select(w_of_bucket.alias("_w"),
-                       F.col(sum_col).cast("double").alias("_sum"),
+                       F.col(sum_col).alias("_sum"),
                        F.col("n_turns").alias("_cnt"),
                        F.col(max_col).cast(vtype).alias("_max")))
 
@@ -186,7 +199,7 @@ def routed_downsample(
         .join(F.broadcast(straddle), raw_bucket == F.col("_sb"))
         .select(
             F.floor((F.col("_sb") - F.lit(lb_ms)) / F.lit(interval_ms)).alias("_w"),
-            survivors.cast("double").alias("_v"),
+            _in_sum_units(column, survivors).alias("_v"),
             survivors.cast(vtype).alias("_vn"))
         .groupBy("_w")
         .agg(F.sum("_v").alias("_sum"), F.count("_v").alias("_cnt"),
@@ -195,7 +208,7 @@ def routed_downsample(
 
     parts = covered.unionByName(from_raw)
     if agg == Q.AVG:
-        value = (F.sum("_sum") / F.sum("_cnt")).cast("double")
+        value = _avg(column)
         sentinel = (F.lit(None).cast("double") if sentinel_as_null
                     else F.lit(Q.DOUBLE_SENTINEL))
     elif agg == Q.MAX:

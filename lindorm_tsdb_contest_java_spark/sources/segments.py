@@ -100,13 +100,14 @@ SEGMENT_SCHEMA = StructType([
     StructField("conv_id_max", StringType(), False),
     StructField("min_ts_us", LongType(), False),
     StructField("max_ts_us", LongType(), False),
-    # AggBucket analog: per-metric zone stats
+    # AggBucket analog: per-metric zone stats; sums are int64 (latency in
+    # whole micros), so a segment's stats never depend on summation order
     StructField("text_len_min", LongType(), False),
     StructField("text_len_max", LongType(), False),
     StructField("text_len_sum", LongType(), False),
     StructField("latency_min", DoubleType(), False),
     StructField("latency_max", DoubleType(), False),
-    StructField("latency_sum", DoubleType(), False),
+    StructField("latency_us_sum", LongType(), False),
     StructField("turn_idx_min", LongType(), False),
     StructField("turn_idx_max", LongType(), False),
     # codec blobs
@@ -217,7 +218,8 @@ _SEGMENT_PA_SCHEMA = pa.schema(
     + [pa.field(n, pa.int64()) for n in
        ("min_ts_us", "max_ts_us",
         "text_len_min", "text_len_max", "text_len_sum")]
-    + [pa.field(n, pa.float64()) for n in ("latency_min", "latency_max", "latency_sum")]
+    + [pa.field(n, pa.float64()) for n in ("latency_min", "latency_max")]
+    + [pa.field("latency_us_sum", pa.int64())]
     + [pa.field(n, pa.int64()) for n in ("turn_idx_min", "turn_idx_max")]
     + [pa.field(n, pa.binary()) for n in
        ("blob_ts", "blob_turn_idx", "blob_text_len", "blob_latency",
@@ -272,7 +274,10 @@ def _encode_slice(tbl: pa.Table, text_level: int = 3) -> dict:
         "text_len_sum": int(tlen.sum()),
         "latency_min": float(lat.min()),
         "latency_max": float(lat.max()),
-        "latency_sum": float(lat.sum()),
+        # whole micros, as operators/tiers.latency_us rounds them (a
+        # literal: importing tiers would load pandas into every encode
+        # worker, +0.4 s per Python worker start)
+        "latency_us_sum": int(np.round(lat * 1e6).astype(np.int64).sum()),
         "turn_idx_min": int(turn.min()),
         "turn_idx_max": int(turn.max()),
         **blobs,

@@ -13,8 +13,9 @@ import numpy as np
 import pytest
 
 from lindorm_tsdb_contest_java_spark.functions.codecs import (
-    dict_decode, dict_encode, dod_decode, dod_encode,
-    gorilla_decode, gorilla_encode, text_decode, text_encode,
+    dict_decode, dict_encode,
+    gorilla_decode, gorilla_encode, int_decode, int_encode,
+    text_decode, text_encode,
     varint_decode, varint_encode, zigzag_decode, zigzag_encode,
     zstd_compress, zstd_decompress,
 )
@@ -52,27 +53,6 @@ def test_varint_small_values_one_byte():
 def test_varint_truncated_raises():
     with pytest.raises(ValueError):
         varint_decode(b"\x80", 1)
-
-
-# ---------- delta-of-delta ----------
-
-@pytest.mark.parametrize("arr", INT64_CASES, ids=range(len(INT64_CASES)))
-def test_dod_roundtrip(arr):
-    assert (dod_decode(dod_encode(arr)) == arr).all()
-
-
-def test_dod_regular_grid_is_tiny():
-    ts = np.arange(0, 36_000_000, 1000, dtype=np.int64)  # reference 1s grid in ms
-    blob = dod_encode(ts)
-    assert len(blob) < len(ts) * 0.01 + 64  # ~1 byte per 100 values
-
-
-def test_dod_piecewise_monotone():
-    # several conversations concatenated: deltas jump negative at boundaries
-    parts = [np.cumsum(RNG.integers(1, 30_000, RNG.integers(1, 50))) + RNG.integers(0, 10**12)
-             for _ in range(20)]
-    arr = np.concatenate(parts).astype(np.int64)
-    assert (dod_decode(dod_encode(arr)) == arr).all()
 
 
 # ---------- gorilla ----------
@@ -195,17 +175,16 @@ def test_encode_throughput_floor():
     ts = np.cumsum(RNG.integers(1, 30_000, 500_000)).astype(np.int64)
     fl = RNG.uniform(0, 100, 500_000)
     t0 = time.perf_counter()
-    dod_encode(ts)
+    int_encode(ts)
     t1 = time.perf_counter()
     gorilla_encode(fl)
     t2 = time.perf_counter()
-    assert (t1 - t0) < 2.0, f"dod encode too slow: {t1-t0:.2f}s for 500k"
+    assert (t1 - t0) < 2.0, f"int encode too slow: {t1-t0:.2f}s for 500k"
     assert (t2 - t1) < 2.0, f"gorilla encode too slow: {t2-t1:.2f}s for 500k"
 
 
 # ---------- best-of-N int codec ----------
 
-from lindorm_tsdb_contest_java_spark.functions.codecs import int_decode, int_encode
 from lindorm_tsdb_contest_java_spark.functions.codecs.dod import (
     MODE_DELTA, MODE_DICT, MODE_DOD, MODE_RAW,
 )
@@ -225,14 +204,22 @@ def test_int_codec_picks_dod_for_regular_grid():
 
 def test_int_codec_avoids_dod_for_nonmonotone():
     """text_len-shaped data: random lengths — delta-of-delta INFLATES the
-    deltas, so the chooser must pick another mode and beat plain dod."""
+    deltas, so the chooser must pick another mode. Pinned to the measured
+    size; a plain dod stream of the same data was 12052 bytes."""
     rng = np.random.default_rng(3)
     tlen = rng.integers(5, 400, 8000).astype(np.int64)
     blob = int_encode(tlen)
     assert blob[0] != MODE_DOD
-    from lindorm_tsdb_contest_java_spark.functions.codecs import dod_encode
-    assert len(blob) <= len(dod_encode(tlen))
+    assert len(blob) == 10054
     assert (int_decode(blob) == tlen).all()
+
+
+def test_int_codec_piecewise_monotone():
+    # several conversations concatenated: deltas jump negative at boundaries
+    parts = [np.cumsum(RNG.integers(1, 30_000, RNG.integers(1, 50))) + RNG.integers(0, 10**12)
+             for _ in range(20)]
+    arr = np.concatenate(parts).astype(np.int64)
+    assert (int_decode(int_encode(arr)) == arr).all()
 
 
 def test_int_codec_picks_dict_for_low_cardinality():
@@ -299,12 +286,11 @@ def test_string_dict_codes_bitpacked_roundtrip():
 
 
 def test_int_decode_rejects_unknown_mode():
-    """A legacy dod_encode stream starts <u64 n>: its low byte aliases the
-    mode byte. Any mode > MODE_DICT must raise, never fall through to a
-    garbage delta parse (ADVICE r02)."""
-    from lindorm_tsdb_contest_java_spark.functions.codecs import dod_encode
-    legacy = dod_encode(np.arange(1000, dtype=np.int64))  # n=1000 -> 0xe8
-    assert legacy[0] > MODE_DICT
+    """A legacy pre-mode-byte dod stream starts <u64 n> <i64 first>: its
+    low byte aliases the mode byte. Any mode > MODE_DICT must raise,
+    never fall through to a garbage delta parse (ADVICE r02)."""
+    legacy = struct.pack("<Q", 1000) + struct.pack("<q", 0)  # n=1000 -> 0xe8
+    assert legacy[0] == 0xe8 > MODE_DICT
     with pytest.raises(ValueError, match="unknown int codec mode"):
         int_decode(legacy)
 

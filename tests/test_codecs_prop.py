@@ -6,7 +6,7 @@ import numpy as np
 from hypothesis import example, given, settings, strategies as st
 
 from lindorm_tsdb_contest_java_spark.functions.codecs import (
-    dict_decode, dict_encode, dod_decode, dod_encode,
+    dict_decode, dict_encode,
     gorilla_decode, gorilla_encode, int_decode, int_encode,
     text_decode, text_encode,
 )
@@ -20,13 +20,6 @@ F64 = st.floats(allow_nan=True, allow_infinity=True, width=64)
 def test_int_codec_roundtrip_prop(xs):
     a = np.array(xs, dtype=np.int64)
     assert (int_decode(int_encode(a)) == a).all()
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(I64, max_size=300))
-def test_dod_roundtrip_prop(xs):
-    a = np.array(xs, dtype=np.int64)
-    assert (dod_decode(dod_encode(a)) == a).all()
 
 
 @settings(max_examples=150, deadline=None)

@@ -350,8 +350,8 @@ def test_percentile_ineligible_buffer_rebuilds_only_touched_buckets(
     assert committed and len(got20) == len(committed)
     for r in got20:
         c = committed[(r["role"], r["tool"], r["bucket_ms"])]
-        assert (r["n_turns"], r["latency_sum"], bytes(r["latency_digest"])) \
-            == (c["n_turns"], c["latency_sum"], bytes(c["latency_digest"]))
+        assert (r["n_turns"], bytes(r["latency_digest"])) \
+            == (c["n_turns"], bytes(c["latency_digest"]))
 
     # exactness: counts per (role, tool) equal the fully-committed twin
     WIDE = (LB, LB + 90 * 86_400_000)
@@ -591,9 +591,9 @@ def test_percentile_noop_upsert_rebuilds_nothing(spark, tmp_path):
     plan = facts(tier).plan
     assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan, plan
     committed = {(r["role"], r["tool"], r["bucket_ms"]):
-                 (r["n_turns"], r["latency_sum"], bytes(r["latency_digest"]))
+                 (r["n_turns"], bytes(r["latency_digest"]))
                  for r in e._pipeline.table("tier_rate_1m").read(spark).collect()}
     got = {(r["role"], r["tool"], r["bucket_ms"]):
-           (r["n_turns"], r["latency_sum"], bytes(r["latency_digest"]))
+           (r["n_turns"], bytes(r["latency_digest"]))
            for r in tier.collect()}
     assert got == committed and committed

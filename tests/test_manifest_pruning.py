@@ -171,7 +171,7 @@ def test_percentile_cover_pieces_read_only_their_chunks(store):
         pruned = tbl.read(spark, span)
         assert _names(pruned) <= _recorded(tbl, *span), name
         in_piece = (F.col("bucket_ms") >= lo) & (F.col("bucket_ms") < hi)
-        key = ["role", "tool", "bucket_ms", "n_turns", "latency_sum"]
+        key = ["role", "tool", "bucket_ms", "n_turns", "latency_digest"]
         got = sorted(map(tuple, pruned.filter(in_piece).select(*key)
                          .collect()))
         full = sorted(map(tuple, tbl.read(spark).filter(in_piece)

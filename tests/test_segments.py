@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from lindorm_tsdb_contest_java_spark.operators.tiers import latency_us
 from lindorm_tsdb_contest_java_spark.sources.generator import generate_dups_variant
 from lindorm_tsdb_contest_java_spark.sources.segments import (
     canonicalize, decode_segments, encode_segments,
@@ -66,6 +67,7 @@ def test_zone_map_stats_match_data(canonical, segments):
         F.min("ts_us").alias("min_ts_us"), F.max("ts_us").alias("max_ts_us"),
         F.sum("text_len").alias("text_len_sum"),
         F.min("latency_s").alias("latency_min"), F.max("latency_s").alias("latency_max"),
+        F.sum(latency_us(F.col("latency_s"))).alias("latency_us_sum"),
     ).toPandas().sort_values(["conv_bucket", "time_chunk"]).reset_index(drop=True))
     # a (bucket, chunk) group may be sub-split into conv-range segments:
     # the group-level stats are the decomposable rollup of the sub-rows
@@ -74,6 +76,7 @@ def test_zone_map_stats_match_data(canonical, segments):
         F.min("min_ts_us").alias("min_ts_us"), F.max("max_ts_us").alias("max_ts_us"),
         F.sum("text_len_sum").alias("text_len_sum"),
         F.min("latency_min").alias("latency_min"), F.max("latency_max").alias("latency_max"),
+        F.sum("latency_us_sum").alias("latency_us_sum"),
     ).toPandas().sort_values(["conv_bucket", "time_chunk"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(
         got.astype({"n_rows": "int64"}), expect.astype({"n_rows": "int64"}),

@@ -4,6 +4,8 @@ FIXTURES.md §3.5: 1m/1h/1d count/sum/min/max cascade composition equals
 direct-from-raw computation bit-exactly; avg derived only at read time.
 """
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -17,7 +19,10 @@ from lindorm_tsdb_contest_java_spark.operators.tiers import (
     build_conv_tier, build_rate_tier, gap_fill, rollup_conv_tier,
     rollup_rate_tier, turn_rate, with_avg,
 )
-from lindorm_tsdb_contest_java_spark.sources.segments import canonicalize
+from lindorm_tsdb_contest_java_spark.sources.generator import generate_transcripts
+from lindorm_tsdb_contest_java_spark.sources.segments import (
+    canonicalize, encode_segments,
+)
 
 KEYS = ["conv_id", "bucket_ms"]
 
@@ -40,26 +45,89 @@ def _pdf(df, keys=KEYS):
 def test_cascade_equals_direct(canon, tier_1m, width):
     """rollup(1m -> coarse) must equal building coarse from raw, exactly.
 
-    Integer measures (count, text_len sum/min/max, latency min/max) are
-    bit-exact by construction. latency_sum is float: the cascade sums in
-    a different order than direct, so compare to 1e-9 rel — the stored
-    tier itself is the ground truth the queries read, and within one
-    tier the value is deterministic."""
+    Every measure is bit-exact by construction: counts and sums are
+    int64 (latency summed as whole micros, latency_us_sum), and min/max
+    pick an input value whatever the order."""
     direct = _pdf(build_conv_tier(canon, width))
     cascaded = _pdf(rollup_conv_tier(tier_1m, width))
-    assert direct.shape == cascaded.shape
     exact_cols = ["conv_id", "bucket_ms", "n_turns", "text_len_sum",
-                  "text_len_min", "text_len_max", "latency_min", "latency_max"]
+                  "text_len_min", "text_len_max", "latency_us_sum",
+                  "latency_min", "latency_max"]
+    assert sorted(direct.columns) == sorted(exact_cols)
     pd.testing.assert_frame_equal(direct[exact_cols], cascaded[exact_cols])
-    np.testing.assert_allclose(direct["latency_sum"], cascaded["latency_sum"], rtol=1e-9)
 
 
 def test_1d_from_1h_equals_1d_from_1m(tier_1m):
     via_1h = _pdf(rollup_conv_tier(rollup_conv_tier(tier_1m, HOUR_MS), DAY_MS))
     direct = _pdf(rollup_conv_tier(tier_1m, DAY_MS))
-    exact = [c for c in via_1h.columns if c != "latency_sum"]
-    pd.testing.assert_frame_equal(via_1h[exact], direct[exact])
-    np.testing.assert_allclose(via_1h["latency_sum"], direct["latency_sum"], rtol=1e-9)
+    pd.testing.assert_frame_equal(via_1h, direct)
+
+
+_RATE_KEYS = ["role", "tool", "bucket_ms"]
+
+
+def _content_hash(df, keys):
+    pdf = df.toPandas().sort_values(keys).reset_index(drop=True)
+    return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()
+
+
+def _stored_hashes(spark, src, shuffle_partitions, input_partitions):
+    """Content hash of every stored tier and the segment stats, built
+    under one shuffle-partition count from one input partitioning."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(shuffle_partitions))
+    canon = canonicalize(src.repartition(input_partitions), n_buckets=8).cache()
+    rate_1m = build_rate_tier(canon, MINUTE_MS).cache()
+    try:
+        conv_1m = build_conv_tier(canon, MINUTE_MS)
+        stats = encode_segments(canon)
+        stats = stats.drop(*[c for c in stats.columns if c.startswith("blob_")])
+        return {
+            "tier_conv_1m": _content_hash(conv_1m, KEYS),
+            "tier_conv_1d": _content_hash(rollup_conv_tier(
+                rollup_conv_tier(conv_1m, HOUR_MS), DAY_MS), KEYS),
+            "tier_conv_1d_direct": _content_hash(
+                build_conv_tier(canon, DAY_MS), KEYS),
+            "tier_rate_1m": _content_hash(rate_1m, _RATE_KEYS),
+            "tier_rate_1h": _content_hash(
+                rollup_rate_tier(rate_1m, HOUR_MS), _RATE_KEYS),
+            "segment_stats": _content_hash(
+                stats, ["conv_bucket", "time_chunk", "conv_id_min"]),
+        }
+    finally:
+        rate_1m.unpersist()
+        canon.unpersist()
+        spark.conf.set(key, saved)
+
+
+@pytest.fixture(scope="module")
+def stored_hashes(spark):
+    """_stored_hashes over one small input, memoized per partitioning."""
+    src = spark.createDataFrame(
+        generate_transcripts(n_conv=60, mean_turns=30, seed=11)).cache()
+    memo = {}
+
+    def get(shuffle_partitions, input_partitions):
+        key = (shuffle_partitions, input_partitions)
+        if key not in memo:
+            memo[key] = _stored_hashes(spark, src, *key)
+        return memo[key]
+    yield get
+    src.unpersist()
+
+
+@pytest.mark.parametrize("input_partitions", [1, 7])
+@pytest.mark.parametrize("shuffle_partitions", [1, 3, 8, 32])
+def test_stored_tiers_are_partition_invariant(
+        stored_hashes, shuffle_partitions, input_partitions):
+    """Every stored measure is exact, so the tiers (digests included) and
+    the segment stats are bit-identical however Spark splits the work —
+    the same as a single-partition run — and the cascaded 1d tier equals
+    the direct one bit for bit."""
+    got = stored_hashes(shuffle_partitions, input_partitions)
+    assert got == stored_hashes(1, 1)
+    assert got["tier_conv_1d"] == got["tier_conv_1d_direct"]
 
 
 def test_avg_derived_from_sum_count(canon, tier_1m):
@@ -146,6 +214,7 @@ def test_tier_percentiles_close_to_exact(spark, transcripts_df):
     from lindorm_tsdb_contest_java_spark.operators.tiers import (
         build_rate_tier, rollup_rate_tier, tier_percentiles,
     )
+    from lindorm_tsdb_contest_java_spark.sources.generator import generate_transcripts
     from lindorm_tsdb_contest_java_spark.sources.segments import canonicalize
 
     canon = canonicalize(transcripts_df, n_buckets=8, grain="conv").cache()
