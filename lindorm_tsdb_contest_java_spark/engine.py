@@ -50,13 +50,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import queries as Q
 from .operators.tiers import (
-    DAY_MS, HOUR_MS, MINUTE_MS, build_rate_tier,
+    MINUTE_MS, TIER_WIDTHS_MS, build_rate_tier,
     latest_from_tier, tier_percentiles,
 )
 from .ops.pipeline import RollupPipeline
 from .plans.router import classify_preds, routed_aggregate, routed_downsample
 from .sources.segments import (
-    CANONICAL_COLUMNS, DEFAULT_CHUNK_US, canonicalize, chunk_range,
+    CANONICAL_COLUMNS, canonicalize, chunk_range,
     decode_segments, decoded_row_schema, segments_overlapping_minutes,
     time_range_from_segments, with_ts,
 )
@@ -98,8 +98,7 @@ class TranscriptTSDB:
         # values (store_config.json — reopening with a different routing
         # would silently miss rows); explicit conflicts raise there.
         self._pipeline = RollupPipeline(spark, root, n_buckets=n_buckets,
-                                        chunk_us=chunk_us,
-                                        tiers={"1h": HOUR_MS, "1d": DAY_MS})
+                                        chunk_us=chunk_us)
         self.n_buckets = self._pipeline.n_buckets
         self._segments = self._pipeline.table("segments")
         # L0 delta store (opt-in, l0_append=True): eligible flushes
@@ -487,7 +486,7 @@ class TranscriptTSDB:
                                     | (F.col("_bts") <= F.col("ts_us")))
                             .select(F.lit("bad").alias("k"),
                                     F.lit(0).cast("long").alias("v")).limit(1))
-        chunk_us = self._pipeline.chunk_us or DEFAULT_CHUNK_US
+        chunk_us = self._pipeline.chunk_us
         chunks = (nr.select(F.floor(F.col("ts_us") / F.lit(chunk_us))
                             .cast("long").alias("v")).distinct()
                   .select(F.lit("chunk").alias("k"), "v"))
@@ -811,15 +810,10 @@ class TranscriptTSDB:
         CURRENT w.r.t. tier_latest: the head commit stamps the
         tier_latest snapshot it derives from, so a crash between the two
         commits leaves a mismatched stamp and the read falls back to the
-        per-chunk argmax until the next flush heals it."""
-        head = self._pipeline.table("tier_latest_head")
-        snap = head.current()
-        if not snap.files:
+        per-chunk argmax until the next flush re-seeds the head."""
+        if not self._pipeline.head_current():
             return None
-        if snap.meta.get("base_latest_snapshot") != \
-                self._tier_latest.current().snapshot_id:
-            return None
-        return head.read(self.spark)
+        return self._pipeline.table("tier_latest_head").read(self.spark)
 
     def execute_latest_query(self, conv_ids: list[str] | None = None,
                              columns: list[str] | None = None) -> DataFrame:
@@ -970,8 +964,7 @@ class TranscriptTSDB:
         finer width. The union covers exactly the 1m rows the un-routed
         read would scan. Tiers with no committed files are skipped."""
         avail = sorted(
-            [(int(w), n) for n, w in self._pipeline.tiers.items()
-             if w % MINUTE_MS == 0
+            [(w, n) for n, w in TIER_WIDTHS_MS.items() if w > MINUTE_MS
              and self._pipeline.table(f"tier_rate_{n}").current().files],
             reverse=True)
         pieces: list[tuple] = []

@@ -23,19 +23,20 @@ import json
 import os
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.codecs import CODEC_VERSION
 from ..operators.tiers import (
-    HOUR_MS, MINUTE_MS, DAY_MS,
+    MINUTE_MS, TIER_WIDTHS_MS,
     build_conv_tier, build_latest_tier, build_rate_tier,
     latest_from_tier, rollup_conv_tier, rollup_rate_tier,
 )
 from ..sources.segments import (
-    DEFAULT_CHUNK_US, canonicalize, decode_segments, encode_segments,
+    DEFAULT_CHUNK_US, bucket_chunk, canonicalize, decode_segments,
+    encode_segments,
 )
 from ..sources.table import SnapshotTable
 
@@ -186,9 +187,6 @@ class RollupPipeline:
 
     spark: SparkSession
     root: str
-    # test hook: raise after the l0 segment append but before the tier
-    # writes — the crash window whose replay must still repair tier_latest
-    fail_after_l0_append: bool = False
     # None = "whatever this store was built with" (stamped at the root on
     # first open; see _check_store_config), falling back to 16 / the 6h
     # segments default for a brand-new store. An EXPLICIT value that
@@ -207,8 +205,6 @@ class RollupPipeline:
     # a level change re-encodes every chunk exactly once (resumable).
     text_level: int | None = None
     commit_batch_chunks: int | None = None  # chunks per commit; None = all in one
-    fail_after_chunks: int | None = None  # test hook: simulate mid-run crash
-    tiers: dict = field(default_factory=lambda: {"1h": HOUR_MS, "1d": DAY_MS})
 
     def __post_init__(self):
         os.makedirs(self.root, exist_ok=True)
@@ -231,17 +227,22 @@ class RollupPipeline:
                 stamped = json.load(f)
 
         def _validate_chunk_us(v: int) -> None:
-            # the 1m-tier partition assignment (chunk_of in _run_batch and
-            # append_l0) assumes tier buckets never straddle chunks: a
-            # chunk width that is not a positive multiple of the 1m tier
-            # grain would assign straddling buckets to the wrong partition
-            # and corrupt tier overwrites (ADVICE r04 low)
-            if v <= 0 or v % (MINUTE_MS * 1000) != 0:
+            """The store grid must nest: chunk_us is a positive multiple
+            of the 1m tier grain, and for each coarse width w (1h, 1d)
+            either w % chunk_us == 0 or chunk_us % w == 0. Then no tier
+            bucket straddles a chunk, and a coarse window spans either
+            part of one chunk or whole chunks, so every tier row has one
+            owning partition (bucket_chunk) and the cascade's work is
+            decided by the pending chunk set alone (_cascade_tier)."""
+            widths_us = [w * 1000 for w in TIER_WIDTHS_MS.values()]
+            if v <= 0 or v % (MINUTE_MS * 1000) or any(
+                    v % w and w % v for w in widths_us):
                 raise ValueError(
-                    f"chunk_us={v} must be a positive multiple of "
-                    f"{MINUTE_MS * 1000} (the 1m tier grain): tier buckets "
-                    "must never straddle time chunks or partition-scoped "
-                    "tier overwrites would corrupt aggregates.")
+                    f"chunk_us={v} must nest with the tier grid: a positive "
+                    f"multiple of {MINUTE_MS * 1000} (1m) that divides, or "
+                    "is a multiple of, each coarse tier width (1h, 1d); "
+                    "otherwise tier buckets straddle time chunks and "
+                    "partition-scoped tier overwrites corrupt aggregates.")
         if stamped is not None:
             for name, given in (("n_buckets", self.n_buckets),
                                 ("chunk_us", self.chunk_us)):
@@ -354,8 +355,8 @@ class RollupPipeline:
         rebuild's fixed job floor every batch). Until the catch-up, the
         1h/1d tiers lag the 1m tier by the pending chunks; 1m-tier and
         segment reads (every engine query path) are unaffected."""
-        kwargs = {"chunk_us": self.chunk_us} if self.chunk_us else {}
-        canon = canonicalize(transcripts, n_buckets=self.n_buckets, **kwargs)
+        canon = canonicalize(transcripts, n_buckets=self.n_buckets,
+                             chunk_us=self.chunk_us)
         if restrict_chunks is not None:
             canon = canon.filter(
                 F.col("time_chunk").isin([int(c) for c in restrict_chunks]))
@@ -377,11 +378,13 @@ class RollupPipeline:
         # changed since the checkpoint — new data appended into an old
         # chunk invalidates only that chunk, not the whole run. The hash
         # covers the row content, not just the key: a same-ts upsert that
-        # wins on content (text_len tie-break) still invalidates its chunk
+        # wins on content (text_len tie-break) still invalidates its
+        # chunk, and so does a turn inserted into an earlier chunk, which
+        # changes the lag latency of the next chunk's first row
         fp_rows = (canon.groupBy("time_chunk").agg(
             F.count("*").alias("n"), F.max("ts_us").alias("mx"),
             F.sum(F.xxhash64("conv_id", "turn_idx", "ts_us", "role", "tool",
-                             "text").cast("decimal(38,0)"))
+                             "text", "latency_s").cast("decimal(38,0)"))
              .alias("h"),  # decimal sum: immune to ANSI long overflow
         ).collect())
         # fingerprint = content (count + ts bounds + row hash-sum) PLUS the
@@ -400,12 +403,10 @@ class RollupPipeline:
                    "chunks_done": len(chunks) - len(todo),
                    "chunks_run": 0, "rows": 0, "encoded_bytes": 0}
 
+        reseed = not self.head_current()
         batch_size = self.commit_batch_chunks or len(todo) or 1
         batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
         for batch in batches:
-            if self.fail_after_chunks is not None \
-                    and metrics["chunks_run"] >= self.fail_after_chunks:
-                raise RuntimeError("simulated failure (test hook)")
             self._run_batch(canon, batch, fingerprints, input_snapshot, metrics)
 
         # ONE head rewrite per run, not one per chunk batch (ADVICE r06):
@@ -413,15 +414,14 @@ class RollupPipeline:
         # tier_latest_head table, so a K-batch bulk load was paying K full
         # rewrites+vacuums where one suffices. Running it after the loop
         # sees the final tier_latest; a crash mid-run leaves the head's
-        # snapshot stamp behind tier_latest and readers fall back to the
-        # per-chunk argmax (the existing staleness gate) until the next
-        # flush heals it — exactly the per-batch crash semantics.
+        # snapshot stamp behind tier_latest, readers fall back to the
+        # per-chunk argmax, and the next flush re-seeds the head.
         if todo:
             convs = (canon.filter(F.col("time_chunk").isin([int(c) for c in todo]))
                      .select("conv_id").distinct())
             self._write_latest_head(convs, lambda slots: self.table(
                 "tier_latest").read(self.spark).join(
-                    F.broadcast(convs), "conv_id", "left_semi"))
+                    F.broadcast(convs), "conv_id", "left_semi"), reseed)
 
         if cascade:
             self.cascade()
@@ -455,6 +455,7 @@ class RollupPipeline:
         strictly after each conversation's committed latest."""
         t0 = time.perf_counter()
         touched = [int(c) for c in touched]
+        reseed = not self.head_current()
         l0 = self.table("segments_l0")
         enc = encode_segments(batch_canon,
                               text_level=self.text_level).cache()
@@ -464,9 +465,6 @@ class RollupPipeline:
             if rows:
                 l0.append(enc, meta={"codec_version": CODEC_VERSION,
                                      "l0_chunks": touched})
-            if self.fail_after_l0_append:
-                raise RuntimeError("simulated failure (test hook): crashed "
-                                   "after l0 append, before tier writes")
             # touched-chunk 1m tiers rebuilt FROM STORAGE (base ∪ l0,
             # numeric columns only) — idempotent overwrite, O(chunk
             # numeric + batch), no text decode
@@ -484,9 +482,7 @@ class RollupPipeline:
             # tier parquet types identical across both write paths or a
             # mixed-snapshot read fails on the type mismatch
             num = num.withColumn("text_len", F.col("text_len").cast("int"))
-            chunk_us = self.chunk_us or DEFAULT_CHUNK_US
-            chunk_of = (F.floor(F.col("bucket_ms") * 1000 / F.lit(chunk_us))
-                        .cast("long").alias("time_chunk"))
+            chunk_of = bucket_chunk(self.chunk_us)
             lt = self.table("tier_latest")
             # latest tier: max_by merge of the old touched partitions with
             # the rows DECODED FROM l0 ITSELF (which now include this
@@ -533,7 +529,7 @@ class RollupPipeline:
             self._write_latest_head(
                 l0_latest_in.select("conv_id").distinct(),
                 lambda slots: slots.unionByName(
-                    l0_latest_in.select(*slots.columns)))
+                    l0_latest_in.select(*slots.columns)), reseed)
             self.checkpoint.add_cascade_pending(touched)
             if cascade:
                 self.cascade()
@@ -547,9 +543,19 @@ class RollupPipeline:
         finally:
             enc.unpersist()
 
+    def head_current(self) -> bool:
+        """Whether `tier_latest_head` exists and is stamped with the
+        current tier_latest snapshot. A crash between the two commits
+        leaves the stamp behind; the head is then stale for every
+        conversation the crashed flush touched. Reads manifests only."""
+        head = self.table("tier_latest_head").current()
+        return bool(head.files) and head.meta.get("base_latest_snapshot") \
+            == self.table("tier_latest").current().snapshot_id
+
     def _write_latest_head(
             self, convs: DataFrame,
-            candidates: Callable[[DataFrame], DataFrame]) -> None:
+            candidates: Callable[[DataFrame], DataFrame],
+            reseed: bool) -> None:
         """Maintain `tier_latest_head`, the ONE writer of it: one
         compacted row per conversation — the reference's in-memory
         MapIndex.getLast slot (index/MapIndex.java:99-114) materialized
@@ -570,7 +576,9 @@ class RollupPipeline:
           is superseded), reading no tier_latest. Its input includes a
           crashed flush's appended rows and the merge is idempotent, so
           a replay repairs the head.
-        With no head yet, either caller seeds it from the whole tier.
+        With no head yet, or with `reseed` (the head was not current
+        when the flush started, see head_current), either caller seeds
+        it from the whole tier.
 
         Layout (HEAD_PARTITION_MIN_ROWS): a small unpartitioned head is
         one sorted file; a partitioned head whose touched buckets are at
@@ -593,15 +601,16 @@ class RollupPipeline:
         meta = {"base_latest_snapshot": snap.snapshot_id}
         partitioned = bool(cur.files) and all(
             "conv_bucket" in f.get("partition", {}) for f in cur.files)
+        merge = bool(cur.files) and not reseed
         scope = None  # the touched buckets of a narrow partitioned write
-        if partitioned:
+        if partitioned and merge:
             bucket_of = F.pmod(F.xxhash64("conv_id"),
                                F.lit(self.n_buckets)).cast("int")
             buckets = sorted(int(r[0]) for r in convs.select(
                 bucket_of.alias("b")).distinct().collect())
             if len(buckets) * 2 <= self.n_buckets:
                 scope = buckets
-        if cur.files:
+        if merge:
             old = head_tbl.read(self.spark)
             if scope is not None:
                 old = old.filter(F.col("conv_bucket").isin(scope))
@@ -655,87 +664,37 @@ class RollupPipeline:
             (lambda t=self.table(f"tier_{grain}_{name}"), b=base, r=rollup,
                     w=width, s=sort: self._cascade_tier(t, b, r, w, pending,
                                                         floor_ms, sort=s))
-            for name, width in self.tiers.items()
+            for name, width in TIER_WIDTHS_MS.items() if width > MINUTE_MS
             for grain, base, rollup, sort in (
                 ("conv", conv_1m, rollup_conv_tier, ["conv_id"]),
                 ("rate", rate_1m, rollup_rate_tier, ["role", "tool"]))
         ])
         self.checkpoint.clear_cascade_pending(pending)
 
-    def _cascade_tier(self, tbl, base_tbl: SnapshotTable, rollup,
-                      width_ms: int, pending: set[int], floor_ms: int | None,
-                      sort: list[str] | None = None) -> None:
-        chunk_us = self.chunk_us or DEFAULT_CHUNK_US
-        width_us = width_ms * 1_000
-        chunk_of = (F.floor(F.col("bucket_ms") * 1000 / F.lit(chunk_us))
-                    .cast("long").alias("time_chunk"))
-        aligned = width_us % chunk_us == 0 or chunk_us % width_us == 0
-        legacy = any("time_chunk" not in f.get("partition", {})
-                     for f in tbl.current().files)
-        if not aligned or legacy:
-            # misaligned tier grid (windows straddle chunk partitions) or
-            # a pre-partitioned layout: one atomic full rebuild that also
-            # migrates the layout. Correctness-first fallback; the
-            # default 6h chunks align with both 1h and 1d.
-            base = base_tbl.read(self.spark)
-            full = rollup(base, width_ms).withColumn("time_chunk", chunk_of)
-            if floor_ms is not None and tbl.current().files:
-                # retention floor set: the 1m base is truncated below it,
-                # so a naive full rebuild would silently discard the
-                # frozen pre-expiry coarse history (ADVICE r03). Union
-                # the recompute (>= cutover) with the EXISTING coarse
-                # rows below the cutover — the continuous-aggregate
-                # guarantee holds through the migration too.
-                cutover = -(-floor_ms // width_ms) * width_ms
-                frozen = (tbl.read(self.spark)
-                          .filter(F.col("bucket_ms") < cutover))
-                if "time_chunk" not in frozen.columns:  # legacy layout
-                    frozen = frozen.withColumn("time_chunk", chunk_of)
-                full = (full.filter(F.col("bucket_ms") >= cutover)
-                        .unionByName(frozen.select(*full.columns)))
-            tbl.overwrite_partitioned(full, "time_chunk", sort_within=sort)
-            return
-        # affected window starts (ms) = every width-aligned window
-        # intersecting a pending chunk, minus retention-frozen ones
-        windows: set[int] = set()
-        for c in pending:
-            lo_ms = c * chunk_us // 1000
-            hi_ms = (c + 1) * chunk_us // 1000
-            w = (lo_ms // width_ms) * width_ms
-            while w < hi_ms:
-                windows.add(w)
-                w += width_ms
+    def _cascade_tier(self, tbl: SnapshotTable, base_tbl: SnapshotTable,
+                      rollup, width_ms: int, pending: set[int],
+                      floor_ms: int | None, sort: list[str]) -> None:
+        """Recompute `tbl`'s width_ms windows over the pending chunks.
+        The store grid nests (_validate_chunk_us), so the chunk set alone
+        decides the work: a window no wider than a chunk lies inside it,
+        and a wider window spans width/chunk whole chunks, all of which
+        its one output row aggregates. Windows starting below the
+        retention cutover keep their frozen rows. The 1m base is read
+        over exactly the resulting chunks, and exactly those partitions
+        are replaced."""
+        per = max(1, width_ms * 1000 // self.chunk_us)  # chunks per window
+        starts = {c // per * per for c in pending}
         if floor_ms is not None:
-            cutover = -(-floor_ms // width_ms) * width_ms
-            windows = {w for w in windows if w >= cutover}
-        if not windows:
+            cutover_us = -(-floor_ms // width_ms) * width_ms * 1000
+            starts = {c for c in starts if c * self.chunk_us >= cutover_us}
+        needed = sorted(c for s in starts for c in range(s, s + per))
+        if not needed:
             return
-        # chunk-level pruning: 1m inputs AND replaced partitions are the
-        # chunks covered by the affected windows (windows cover pending
-        # chunks exactly when width <= chunk; a wider window pulls in its
-        # sibling chunks so its single output row aggregates fully)
-        needed = sorted({ch for w in windows
-                         for ch in range(w * 1000 // chunk_us,
-                                         (w + width_ms) * 1000 // chunk_us)})
-        win_col = (F.floor(F.col("bucket_ms") / F.lit(width_ms))
-                   * F.lit(width_ms))
-        base = base_tbl.read(self.spark, (needed[0], needed[-1]))
-        if len(windows) <= 256:
-            part = base.filter(F.col("time_chunk").isin(needed)).filter(
-                win_col.isin(sorted(windows)))
-        else:
-            # a first build / wide backfill would put thousands of
-            # literals in the plan; the contiguous hull is equally
-            # correct (idempotent recompute of any interior window) and
-            # keeps the predicate O(1) — parquet min/max pruning applies
-            lo, hi = min(windows), max(windows) + width_ms
-            part = base.filter(
-                (F.col("time_chunk") >= needed[0])
-                & (F.col("time_chunk") <= needed[-1])
-                & (F.col("bucket_ms") >= lo) & (F.col("bucket_ms") < hi))
-            needed = list(range(needed[0], needed[-1] + 1))
+        base = (base_tbl.read(self.spark, (needed[0], needed[-1]))
+                .filter(F.col("time_chunk").isin(needed)))
         tbl.overwrite_partitions_multi(
-            rollup(part, width_ms).withColumn("time_chunk", chunk_of),
+            rollup(base, width_ms).withColumn(
+                "time_chunk", bucket_chunk(self.chunk_us)),
             "time_chunk", needed, sort_within=sort)
 
     def _tier_1m_floor_ms(self) -> int | None:
@@ -784,10 +743,7 @@ class RollupPipeline:
                      F.sum("encoded_bytes").alias("bytes")).collect()})
 
         # 1m tiers for the same batch, partitioned by the owning chunk
-        # (tier buckets never straddle chunks: chunk_us is a multiple of 60s)
-        chunk_us = self.chunk_us or DEFAULT_CHUNK_US
-        chunk_of = (F.floor(F.col("bucket_ms") * 1000 / F.lit(chunk_us))
-                    .cast("long").alias("time_chunk"))
+        chunk_of = bucket_chunk(self.chunk_us)
         # the three 1m-grain tier writes are independent Spark jobs over
         # the same cached canon against three different tables (one
         # commit lock each): submit them concurrently — flush latency is

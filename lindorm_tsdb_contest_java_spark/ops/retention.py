@@ -43,7 +43,6 @@ import os
 import time
 from dataclasses import dataclass
 
-from ..sources.segments import DEFAULT_CHUNK_US
 
 _STATE_FILE = "retention.json"
 
@@ -109,7 +108,7 @@ def apply_retention(pipeline, policy: RetentionPolicy,
     from the manifest — the per-partition metrics rows the north rule
     asks of every tier write apply to tier *deletes* too."""
     now_us = int(time.time() * 1e6) if now_us is None else int(now_us)
-    chunk_us = pipeline.chunk_us or DEFAULT_CHUNK_US
+    chunk_us = pipeline.chunk_us
     # l0 delta segments (engine l0_append flushes) carry no partition
     # metadata — a retention drop over the base table would leave their
     # expired rows alive and un-expirable. Compact first.

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType, TimestampType,
@@ -63,6 +63,16 @@ def chunk_range(lb_ms: int, ub_ms: int, chunk_us: int) -> tuple[int, int]:
     if ub_ms <= lb_ms:
         return lo, lo - 1
     return lo, (ub_ms * 1000 - 1) // chunk_us
+
+
+def bucket_chunk(chunk_us: int) -> Column:
+    """`time_chunk` of a tier row: the chunk holding its `bucket_ms`
+    start. The store grid nests (RollupPipeline validates chunk_us), so
+    a row no wider than a chunk lies inside this chunk, and a wider one
+    starts on a chunk boundary."""
+    return F.floor(F.col("bucket_ms") * 1000 / F.lit(chunk_us)).cast("long")
+
+
 # conv-range sub-segment target (rows): an encode group larger than this
 # is split at conversation boundaries into sub-segments of >= this many
 # rows, each carrying a conv_id zone map. ~4k rows is the measured
@@ -490,7 +500,7 @@ def segments_overlapping_minutes(segments: DataFrame, minutes: DataFrame,
     m_us = F.col("bucket_ms") * 1000
     return segments.join(
         F.broadcast(minutes.select("bucket_ms")),
-        (F.col("time_chunk") == F.floor(m_us / F.lit(chunk_us)))
+        (F.col("time_chunk") == bucket_chunk(chunk_us))
         & (F.col("min_ts_us") < m_us + F.lit(_MINUTE_US))
         & (F.col("max_ts_us") >= m_us),
         "left_semi")

@@ -105,30 +105,90 @@ def test_upsert_overwrite_through_api(spark, tmp_path):
     assert list(got2["text"]) == ["a", "b-edited", "c"]
 
 
-def test_same_ts_upsert_of_committed_key_survives_flush(spark, tmp_path):
-    """An upsert of a COMMITTED key at the same ts that wins on content
-    (canonicalize keeps the longer text on a ts tie) must reach the
-    store: the chunk fingerprint hashes row content, not just the key,
-    so the flush re-encodes the chunk instead of skipping it."""
-    db = eng.connect(spark, str(tmp_path / "samets"), n_buckets=4)
+HOUR_US = 3_600 * 1_000_000
+
+
+@pytest.mark.parametrize("case", ["same_ts", "cross_chunk"])
+def test_same_ts_upsert_of_committed_key_survives_flush(spark, tmp_path, case):
+    """A write that changes the content of a COMMITTED chunk must reach
+    the store, so the chunk fingerprint hashes row content, not just the
+    key, and the flush re-encodes the chunk instead of skipping it:
+    - same_ts: an upsert of a committed key at the same ts that wins on
+      content (canonicalize keeps the longer text on a ts tie);
+    - cross_chunk: a turn inserted into an earlier chunk, which changes
+      the lag latency of the next chunk's first row (86400 s, not the
+      172800 s it had before the insert)."""
+    db = eng.connect(spark, str(tmp_path / case), n_buckets=4)
+    t0 = 1_700_000_000_000_000
+    step = 1_000_000 if case == "same_ts" else 24 * HOUR_US
     base = pd.DataFrame({
         "conv_id": ["c1"] * 3, "turn_idx": np.array([0, 1, 2], dtype=np.int32),
         "role": ["user"] * 3, "text": ["a", "b", "c"], "tool": [""] * 3,
-        "ts": pd.to_datetime([1_700_000_000_000_000 + i * 1_000_000 for i in range(3)],
-                             unit="us"),
+        "ts": pd.to_datetime([t0 + i * step for i in range(3)], unit="us"),
     })
-    db.write(spark.createDataFrame(base))
+    if case == "same_ts":
+        first = base
+        later = base.iloc[[1]].assign(role="assistant", text="b-edited")
+    else:
+        first, later = base.iloc[[0, 2]], base.iloc[[1]]
+    db.write(spark.createDataFrame(first))
     db.shutdown()
-    db.write(spark.createDataFrame(
-        base.iloc[[1]].assign(role="assistant", text="b-edited")))
+    db.write(spark.createDataFrame(later))
+    # the hour holding turn 2, whose lag latency the insert changes
+    lb = (t0 + 2 * step) // HOUR_US * HOUR_US // 1000
     answers = []
     for _ in range(2):  # buffered, then flushed
-        answers.append(sorted(map(str, db.execute_time_range_query(
-            "c1", 0, 2_000_000_000_000, ["turn_idx", "role", "text"])
-            .collect())))
+        answers.append((sorted(map(str, db.execute_time_range_query(
+            "c1", 0, 2_000_000_000_000,
+            ["turn_idx", "role", "text", "latency_s"]).collect())),
+            db.execute_aggregate_query("c1", "latency_s", lb,
+                                       lb + 3_600_000, "MAX").collect()))
         db.shutdown()
     assert answers[0] == answers[1]
-    assert "text='b-edited'" in answers[1][1] and "assistant" in answers[1][1]
+    rows = answers[1][0]
+    if case == "same_ts":
+        assert "text='b-edited'" in rows[1] and "assistant" in rows[1]
+    else:
+        assert "latency_s=86400.0" in rows[2]
+        assert answers[1][1][0][-1] == 86400.0
+
+
+def test_latest_head_reseeded_after_crash_before_head_commit(spark, tmp_path,
+                                                             monkeypatch):
+    """A crash between the tier_latest commit and the head commit leaves
+    the head stamped behind the tier. The next flush must re-seed the
+    whole head, not merge only its own conversations into it and stamp
+    it current: that kept the crashed flush's conversations on their old
+    slot."""
+    root = str(tmp_path / "headcrash")
+    t0 = 1_700_000_000_000_000
+
+    def rows(conv, turn, ts_us):
+        return spark.createDataFrame(pd.DataFrame({
+            "conv_id": [conv], "turn_idx": np.array([turn], dtype=np.int32),
+            "role": ["user"], "text": [f"{conv}{turn}"], "tool": [""],
+            "ts": pd.to_datetime([ts_us], unit="us")}))
+
+    db = eng.connect(spark, root, n_buckets=4)
+    db.write(rows("a", 0, t0))
+    db.write(rows("b", 0, t0 + 1_000_000))
+    db.shutdown()
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash before the head commit")
+
+    monkeypatch.setattr(db._pipeline, "_write_latest_head", crash)
+    db.write(rows("a", 1, t0 + 24 * HOUR_US))  # another chunk
+    with pytest.raises(RuntimeError, match="simulated"):
+        db.shutdown()
+    monkeypatch.undo()
+    db2 = eng.connect(spark, root, n_buckets=4)
+    db2.write(rows("b", 1, t0 + 48 * HOUR_US))  # a third chunk
+    db2.shutdown()
+    got = sorted((r["conv_id"], r["turn_idx"])
+                 for r in db2.execute_latest_query().collect())
+    assert got == [("a", 1), ("b", 1)]
+    assert db2._pipeline.head_current()
 
 
 def test_latest_served_from_tier_after_shutdown(spark, db, oracle_pdf):

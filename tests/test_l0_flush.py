@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lindorm_tsdb_contest_java_spark import engine as eng
+from lindorm_tsdb_contest_java_spark.sources.table import SnapshotTable
 
 BASE_S = 1_704_067_200
 
@@ -226,7 +227,8 @@ def test_l0_restart_protocol(spark, tmp_path):
     assert got.count() == 10
 
 
-def test_l0_crash_after_append_repairs_latest_on_replay(spark, tmp_path):
+def test_l0_crash_after_append_repairs_latest_on_replay(spark, tmp_path,
+                                                       monkeypatch):
     """A flush that crashes AFTER the l0 segment append but BEFORE the
     tier writes replays from the raw log with an EMPTY batch (the key
     anti-join removes everything already in l0) — the replay must still
@@ -244,10 +246,19 @@ def test_l0_crash_after_append_repairs_latest_on_replay(spark, tmp_path):
     b.write(spark.createDataFrame(second))
     b.shutdown()
     # crash window: l0 segments appended, tier writes never ran
-    a._pipeline.fail_after_l0_append = True
+    append = SnapshotTable.append
+
+    def crash_after_l0_append(self, *args, **kwargs):
+        append(self, *args, **kwargs)
+        if self.root.endswith("segments_l0"):
+            raise RuntimeError("simulated failure: crashed after l0 append, "
+                               "before tier writes")
+
+    monkeypatch.setattr(SnapshotTable, "append", crash_after_l0_append)
     a.write(spark.createDataFrame(second))
     with pytest.raises(RuntimeError, match="simulated"):
         a.shutdown()
+    monkeypatch.undo()
     # reopen (fresh process): raw log still holds the batch; the replay's
     # anti-join empties it, and the tier rebuild must repair tier_latest
     a2 = eng.connect(spark, str(tmp_path / "l0crash"), n_buckets=4,

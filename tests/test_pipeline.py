@@ -45,7 +45,7 @@ def _hashes(spark, root):
     return {t: _content_hash(spark, root, t, cols) for t, cols in TABLES.items()}
 
 
-def test_run_rerun_resume(spark, transcripts_df, tmp_path):
+def test_run_rerun_resume(spark, transcripts_df, tmp_path, monkeypatch):
     clean_root = str(tmp_path / "clean")
     p = RollupPipeline(spark, clean_root, n_buckets=8, chunk_us=CHUNK_US)
     m1 = p.run(transcripts_df, input_snapshot=1)
@@ -61,9 +61,19 @@ def test_run_rerun_resume(spark, transcripts_df, tmp_path):
     # to the same content a clean single-batch run produces
     crash_root = str(tmp_path / "crash")
     crashing = RollupPipeline(spark, crash_root, n_buckets=8, chunk_us=CHUNK_US,
-                              commit_batch_chunks=2, fail_after_chunks=2)
+                              commit_batch_chunks=2)
+    run_batch, batches = RollupPipeline._run_batch, []
+
+    def crash_on_second_batch(self, *args):
+        batches.append(args[1])
+        if len(batches) == 2:
+            raise RuntimeError("simulated failure")
+        run_batch(self, *args)
+
+    monkeypatch.setattr(RollupPipeline, "_run_batch", crash_on_second_batch)
     with pytest.raises(RuntimeError, match="simulated failure"):
         crashing.run(transcripts_df, input_snapshot=1)
+    monkeypatch.undo()
     resumed = RollupPipeline(spark, crash_root, n_buckets=8, chunk_us=CHUNK_US)
     m3 = resumed.run(transcripts_df, input_snapshot=1)
     assert 0 < m3["chunks_run"] < m3["chunks_total"]
@@ -213,15 +223,20 @@ def test_lineage_compaction_preserves_rows(spark, transcripts_df, tmp_path):
 
 def test_chunk_us_must_align_with_tier_grain(spark, tmp_path):
     """chunk_us is a user-facing knob stamped into store_config.json; the
-    1m-tier partition assignment assumes tier buckets never straddle
-    chunks, so a width that is not a positive multiple of 60s must be
-    refused at open, not corrupt tier overwrites later (ADVICE r04)."""
-    with pytest.raises(ValueError, match="multiple of"):
-        RollupPipeline(spark, str(tmp_path / "bad90s"), chunk_us=90_000_000)
-    with pytest.raises(ValueError, match="multiple of"):
-        RollupPipeline(spark, str(tmp_path / "badneg"), chunk_us=-60_000_000)
-    # aligned widths (any multiple of a minute) still open fine
-    RollupPipeline(spark, str(tmp_path / "ok2m"), chunk_us=120_000_000)
+    store grid must nest with the 1m/1h/1d tiers (a whole number of
+    minutes that divides, or is a multiple of, 1 h and 1 d), so a width
+    that would let a tier bucket straddle a chunk must be refused at
+    open, not corrupt tier overwrites later (ADVICE r04)."""
+    minute_us = 60 * 1_000_000
+    for name, bad in (("90s", 90_000_000), ("neg", -minute_us),
+                      ("90m", 90 * minute_us), ("25h", 25 * 60 * minute_us)):
+        with pytest.raises(ValueError, match="nest with the tier grid"):
+            RollupPipeline(spark, str(tmp_path / f"bad{name}"), chunk_us=bad)
+    # nesting widths still open fine: 2 min, 15 min, 1 h, 6 h, 12 h,
+    # 9 d, 40 d
+    for minutes in (2, 15, 60, 6 * 60, 12 * 60, 9 * 1440, 40 * 1440):
+        RollupPipeline(spark, str(tmp_path / f"ok{minutes}m"),
+                       chunk_us=minutes * minute_us)
 
 
 def test_tier_files_are_conv_ordered(spark, transcripts_df, tmp_path):

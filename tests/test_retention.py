@@ -255,40 +255,6 @@ def test_all_chunks_dropped_floor_is_chunk_aligned(spark, transcripts_df, tmp_pa
     assert floor >= now_us - keep_us        # never below the horizon
 
 
-def test_full_rebuild_preserves_frozen_coarse_rows(spark, transcripts_df, tmp_path):
-    """ADVICE r03: the legacy/misaligned full-rebuild branch of the
-    cascade must not discard frozen coarse history below the retention
-    floor when rebuilding from the truncated 1m base."""
-    root = str(tmp_path / "frozen")
-    p = _run(spark, root, transcripts_df)
-    from lindorm_tsdb_contest_java_spark.sources.segments import canonicalize
-    _, hi = _bounds(canonicalize(transcripts_df, n_buckets=8, chunk_us=CHUNK_US))
-    now_us = hi + 1
-    chunks = _seg_chunks(root)
-    keep_us = now_us - (chunks[1] + 1) * CHUNK_US  # expire two oldest chunks
-    apply_retention(
-        p, RetentionPolicy(segments_keep_us=keep_us, tier_1m_keep_us=keep_us),
-        now_us=now_us, vacuum=False)
-    floor_ms = read_retention_floor_us(root) // 1000
-    tbl = p.table("tier_conv_1h")
-    pre = tbl.read(spark)
-    frozen_before = pre.filter(F.col("bucket_ms") < floor_ms).count()
-    total_before = pre.count()
-    assert frozen_before > 0
-    # force the legacy (partition-untracked) layout: a full overwrite
-    # whose files record no time_chunk partition
-    tbl.overwrite(tbl.read(spark))
-    # trigger a cascade over one surviving chunk
-    p.checkpoint.add_cascade_pending([chunks[2]])
-    p._cascade()
-    post = tbl.read(spark)
-    assert post.filter(F.col("bucket_ms") < floor_ms).count() == frozen_before
-    assert post.count() == total_before
-    # and the rebuild migrated the layout back to partition-tracked files
-    assert all("time_chunk" in f.get("partition", {})
-               for f in tbl.current().files)
-
-
 def test_lineage_compact_mixed_schemas_keeps_types(spark, transcripts_df, tmp_path):
     """ADVICE r03: compaction across mixed-schema lineage files (rollup
     rows with int64 time_chunk/row_count vs retention rows without) must
