@@ -174,9 +174,9 @@ class TranscriptTSDB:
         prior flush was itself a fast flush; a fallback flush re-checks
         the invariant on the full canonical and records it in
         flush_state.json, so disordered history permanently (and
-        correctly) disables the shortcut. input_snapshot is pinned to 0:
-        fingerprints are content-addressed (count + ts bounds + row
-        hash-sum + codec version) and carry across snapshots.
+        correctly) disables the shortcut. The chunk fingerprints are
+        content-addressed (count + ts bounds + row hash-sum + codec
+        version), so they alone decide which chunks a flush re-encodes.
 
         `cascade=False` defers the 1h/1d coarse rebuild (crash-safe via
         the checkpoint's cascade_pending set) — the streaming sink's
@@ -203,7 +203,7 @@ class TranscriptTSDB:
             elif touched is not None and not self._segments_l0.current().files:
                 self._pipeline.run(
                     self._fast_flush_input(new_rows, touched),
-                    input_snapshot=0, restrict_chunks=touched,
+                    restrict_chunks=touched,
                     cascade=cascade)
             else:
                 # first flush, or fallback — also the COMPACTION path when
@@ -289,8 +289,7 @@ class TranscriptTSDB:
         if has_l0:
             self._set_compact_marker()
         self._set_ordered(False)
-        m = self._pipeline.run(rows, input_snapshot=0,
-                               check_order=True, cascade=cascade)
+        m = self._pipeline.run(rows, check_order=True, cascade=cascade)
         self._set_ordered(bool(m.get("per_conv_ordered")))
         if has_l0:
             self._segments_l0.truncate(meta={"reason": "compacted"})
@@ -564,8 +563,9 @@ class TranscriptTSDB:
         """Expire committed history per `policy` (ops/retention.py):
         metadata-only partition drops + optional physical vacuum. The
         coarse 1h/1d tiers and the latest tier are never expired, and
-        the next flush's cascade preserves their values over the expired
-        range (RollupPipeline._retention_stable). No reference analog —
+        the cascade never recomputes a coarse window that starts below
+        the retention floor, so their values over the expired range are
+        kept (RollupPipeline._cascade_tier). No reference analog —
         the contest engine never deletes; this is the north-star
         retention surface."""
         from .ops.retention import apply_retention

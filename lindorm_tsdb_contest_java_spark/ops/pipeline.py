@@ -7,8 +7,9 @@ metadata persistence (TSDBEngineImpl.java:127-169) and restart recovery
 - every tier write is scoped to a `(tier, time_chunk)` partition and
   committed via SnapshotTable.overwrite_partitions → re-running a
   completed chunk replaces it with identical content (idempotent);
-- a checkpoint JSON records, per job, the input snapshot id and the set
-  of completed chunks; resume = skip completed chunks, finish the rest;
+- a checkpoint JSON records, per job, the content fingerprint of every
+  completed chunk; resume = skip the chunks whose fingerprint still
+  matches, finish the rest;
 - every chunk write appends a lineage row (input files, row counts,
   encoded bytes, wall time) to a metrics table — the per-partition
   lineage the north_rule requires.
@@ -40,19 +41,6 @@ from ..sources.segments import (
 )
 from ..sources.table import SnapshotTable
 
-# tier_latest_head layout policy: at or below this many rows (the head's,
-# or the tier's as a conservative head <= tier proxy when seeding) the
-# head is ONE sorted file rewritten whole; above it the head is
-# partitioned by conv_bucket and a narrow flush replaces only its
-# buckets. The partitioned write's fixed machinery (rebalance exchange +
-# per-bucket files + bucket collect, ~+0.3-1 s) costs more than
-# rewriting a small head outright; the two layouts measured EQUAL at
-# ~1M conversations (tools/head_scale_bench.py: 1.15 s scoped vs 1.20 s
-# full for a 2-conv flush), so the threshold sits just below that
-# crossover, and above it the single-file wall keeps growing with total
-# conversations while the scoped one stays ~flat.
-HEAD_PARTITION_MIN_ROWS = 500_000
-
 
 def _parallel_jobs(*thunks) -> None:
     """Run independent Spark actions concurrently from driver threads
@@ -72,7 +60,7 @@ def _parallel_jobs(*thunks) -> None:
 
 
 class Checkpoint:
-    """Atomic JSON checkpoint: {job: {input_snapshot, done: [chunk...]}}."""
+    """Atomic JSON checkpoint: {job: {done: {chunk: fingerprint}}}."""
 
     def __init__(self, path: str):
         self.path = path
@@ -83,20 +71,16 @@ class Checkpoint:
         with open(self.path) as f:
             return json.load(f)
 
-    def done_chunks(self, job: str, input_snapshot: int) -> dict:
+    def done_chunks(self, job: str) -> dict:
         """chunk -> content fingerprint at the time it was completed."""
-        st = self._load().get(job)
-        if not st or st.get("input_snapshot") != input_snapshot:
-            return {}
-        return {int(k): v for k, v in st.get("done", {}).items()}
+        return {int(k): v
+                for k, v in self._load().get(job, {}).get("done", {}).items()}
 
-    def mark_done(self, job: str, input_snapshot: int, chunk, fingerprint) -> None:
+    def mark_done(self, job: str, chunk, fingerprint) -> None:
+        # rebuilt entry: drops keys older builds kept beside "done"
         st = self._load()
-        entry = st.get(job)
-        if not entry or entry.get("input_snapshot") != input_snapshot:
-            entry = {"input_snapshot": input_snapshot, "done": {}}
-        entry["done"][str(chunk)] = fingerprint
-        st[job] = entry
+        st[job] = {"done": {**st.get(job, {}).get("done", {}),
+                            str(chunk): fingerprint}}
         self._save(st)
 
     def cascade_pending(self) -> set[int]:
@@ -329,7 +313,7 @@ class RollupPipeline:
     def table(self, name: str) -> SnapshotTable:
         return SnapshotTable.create(os.path.join(self.root, name))
 
-    def run(self, transcripts: DataFrame, input_snapshot: int = 0,
+    def run(self, transcripts: DataFrame,
             restrict_chunks: list[int] | None = None,
             check_order: bool = False, cascade: bool = True) -> dict:
         """Process every time_chunk not yet checkpointed. Returns metrics.
@@ -362,8 +346,7 @@ class RollupPipeline:
                 F.col("time_chunk").isin([int(c) for c in restrict_chunks]))
         canon = canon.cache()
         try:
-            metrics = self._run_chunks(canon, input_snapshot,
-                                       cascade=cascade)
+            metrics = self._run_chunks(canon, cascade=cascade)
             if check_order:
                 metrics["per_conv_ordered"] = (
                     canon.filter(F.col("latency_s") < 0).limit(1).count() == 0)
@@ -371,8 +354,7 @@ class RollupPipeline:
         finally:
             canon.unpersist()
 
-    def _run_chunks(self, canon: DataFrame, input_snapshot: int,
-                    cascade: bool = True) -> dict:
+    def _run_chunks(self, canon: DataFrame, cascade: bool = True) -> dict:
         # per-chunk content fingerprint (count + ts bounds + row hash-sum):
         # incremental processing redoes exactly the chunks whose content
         # changed since the checkpoint — new data appended into an old
@@ -380,12 +362,15 @@ class RollupPipeline:
         # covers the row content, not just the key: a same-ts upsert that
         # wins on content (text_len tie-break) still invalidates its
         # chunk, and so does a turn inserted into an earlier chunk, which
-        # changes the lag latency of the next chunk's first row
+        # changes the lag latency of the next chunk's first row. The same
+        # job collects each chunk's conv_bucket set: the head rewrite's
+        # scope, so the head writer runs no job to find it
         fp_rows = (canon.groupBy("time_chunk").agg(
             F.count("*").alias("n"), F.max("ts_us").alias("mx"),
             F.sum(F.xxhash64("conv_id", "turn_idx", "ts_us", "role", "tool",
                              "text", "latency_s").cast("decimal(38,0)"))
              .alias("h"),  # decimal sum: immune to ANSI long overflow
+            F.collect_set("conv_bucket").alias("b"),
         ).collect())
         # fingerprint = content (count + ts bounds + row hash-sum) PLUS the
         # codec wire version (a format bump invalidates every chunk, so
@@ -396,8 +381,9 @@ class RollupPipeline:
                         f'v{CODEC_VERSION}:L{self.text_level}'
                         f':{r["n"]}:{r["mx"]}:{r["h"]}'
                         for r in fp_rows}
+        chunk_buckets = {int(r["time_chunk"]): r["b"] for r in fp_rows}
         chunks = sorted(fingerprints)
-        done = self.checkpoint.done_chunks("rollup", input_snapshot)
+        done = self.checkpoint.done_chunks("rollup")
         todo = [c for c in chunks if done.get(c) != fingerprints[c]]
         metrics = {"chunks_total": len(chunks),
                    "chunks_done": len(chunks) - len(todo),
@@ -407,21 +393,22 @@ class RollupPipeline:
         batch_size = self.commit_batch_chunks or len(todo) or 1
         batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
         for batch in batches:
-            self._run_batch(canon, batch, fingerprints, input_snapshot, metrics)
+            self._run_batch(canon, batch, fingerprints, metrics)
 
         # ONE head rewrite per run, not one per chunk batch (ADVICE r06):
-        # the head update reads+overwrites the whole unpartitioned
-        # tier_latest_head table, so a K-batch bulk load was paying K full
-        # rewrites+vacuums where one suffices. Running it after the loop
-        # sees the final tier_latest; a crash mid-run leaves the head's
-        # snapshot stamp behind tier_latest, readers fall back to the
-        # per-chunk argmax, and the next flush re-seeds the head.
+        # a K-batch bulk load would otherwise pay K head rewrites+vacuums
+        # where one suffices. Running it after the loop sees the final
+        # tier_latest; a crash mid-run leaves the head's snapshot stamp
+        # behind tier_latest, readers fall back to the per-chunk argmax,
+        # and the next flush re-seeds the head.
         if todo:
             convs = (canon.filter(F.col("time_chunk").isin([int(c) for c in todo]))
                      .select("conv_id").distinct())
-            self._write_latest_head(convs, lambda slots: self.table(
-                "tier_latest").read(self.spark).join(
-                    F.broadcast(convs), "conv_id", "left_semi"), reseed)
+            buckets = {int(b) for c in todo for b in chunk_buckets[c]}
+            self._write_latest_head(
+                convs, buckets, lambda slots: self.table("tier_latest")
+                .read(self.spark).join(F.broadcast(convs), "conv_id",
+                                       "left_semi"), reseed)
 
         if cascade:
             self.cascade()
@@ -459,6 +446,7 @@ class RollupPipeline:
         l0 = self.table("segments_l0")
         enc = encode_segments(batch_canon,
                               text_level=self.text_level).cache()
+        l0_latest_in = None
         try:
             agg = enc.agg(F.sum("n_rows"), F.sum("encoded_bytes")).collect()[0]
             rows, enc_bytes = int(agg[0] or 0), int(agg[1] or 0)
@@ -496,7 +484,9 @@ class RollupPipeline:
             # idempotent (max_by re-picks the same winner). l0 is bounded
             # by compact_every, so decoding its touched chunks (text
             # included — the latest tier carries full rows) is O(recent
-            # batches), never O(history).
+            # batches), never O(history). Persisted: the tier_latest merge
+            # and the head's conversations, buckets and candidates all
+            # read this one decode.
             if l0.current().files:
                 l0_latest_in = decode_segments(
                     l0.read(self.spark, span).filter(chunk_filter),
@@ -509,6 +499,14 @@ class RollupPipeline:
                                             F.col("text_len").cast("int")))
             else:  # empty batch against an empty l0: nothing to repair
                 l0_latest_in = batch_canon
+            l0_latest_in = l0_latest_in.persist()
+            # the head's conversations and buckets in one collect: l0
+            # holds O(recent batches) conversations, and a local frame
+            # broadcasts without a job
+            pairs = l0_latest_in.select("conv_id",
+                                        "conv_bucket").distinct().collect()
+            convs = self.spark.createDataFrame(
+                [(r[0],) for r in pairs], "conv_id string")
             if lt.current().files:
                 lt_old = lt.read(self.spark, span)
                 lt_in = lt_old.filter(chunk_filter).unionByName(
@@ -527,7 +525,7 @@ class RollupPipeline:
                     sort_within=["conv_id"]),
             )
             self._write_latest_head(
-                l0_latest_in.select("conv_id").distinct(),
+                convs, {int(r[1]) for r in pairs},
                 lambda slots: slots.unionByName(
                     l0_latest_in.select(*slots.columns)), reseed)
             self.checkpoint.add_cascade_pending(touched)
@@ -542,6 +540,8 @@ class RollupPipeline:
             return {"rows": rows, "encoded_bytes": enc_bytes}
         finally:
             enc.unpersist()
+            if l0_latest_in is not None:
+                l0_latest_in.unpersist()
 
     def head_current(self) -> bool:
         """Whether `tier_latest_head` exists and is stamped with the
@@ -553,7 +553,7 @@ class RollupPipeline:
             == self.table("tier_latest").current().snapshot_id
 
     def _write_latest_head(
-            self, convs: DataFrame,
+            self, convs: DataFrame, buckets: set[int],
             candidates: Callable[[DataFrame], DataFrame],
             reseed: bool) -> None:
         """Maintain `tier_latest_head`, the ONE writer of it: one
@@ -563,11 +563,15 @@ class RollupPipeline:
         reads O(convs) rows instead of argmaxing O(convs × chunks)
         per-chunk winners.
 
-        Commits `old head ⋉̸ convs ∪ winners`: untouched conversations'
-        slots pass through, and each conversation in `convs` gets the
-        max_by winner of `candidates(slots)`, where `slots` are the
-        touched conversations' current head rows. The callers differ
-        only in that function:
+        The head is always partitioned by conv_bucket. A merge reads and
+        replaces only `buckets`, the conv_buckets of `convs`, so the
+        flush floor stays O(batch), not O(total convs); a batch that
+        touches every bucket is the case where that set is all of them.
+        It commits `old ⋉̸ convs ∪ winners` over those buckets: untouched
+        conversations' slots pass through, and each conversation in
+        `convs` gets the max_by winner of `candidates(slots)`, where
+        `slots` are the touched conversations' current head rows. The
+        callers differ only in that function:
         - the rewrite flush passes its tier_latest rows and ignores the
           slots — a full recompute, because a rewrite can supersede the
           very row a slot holds (the stale slot must not compete);
@@ -576,19 +580,14 @@ class RollupPipeline:
           is superseded), reading no tier_latest. Its input includes a
           crashed flush's appended rows and the merge is idempotent, so
           a replay repairs the head.
-        With no head yet, or with `reseed` (the head was not current
-        when the flush started, see head_current), either caller seeds
-        it from the whole tier.
+        A seed rebuilds every partition from the whole tier. It runs
+        when there is no head yet, with `reseed` (the head was not
+        current when the flush started, see head_current), or when the
+        head's files record no conv_bucket: an unpartitioned head
+        written by an older build migrates on its next flush.
 
-        Layout (HEAD_PARTITION_MIN_ROWS): a small unpartitioned head is
-        one sorted file; a partitioned head whose touched buckets are at
-        most half of n_buckets (the streaming micro-batch regime) reads
-        and replaces ONLY those buckets, so the flush floor stays
-        O(batch), not O(total convs); a seed or migration above the
-        threshold, or a wide batch (a hash-spread batch covers every
-        bucket, so scoping would rewrite the same rows), rewrites every
-        partition. The commit stamps the tier_latest snapshot it derives
-        from; readers treat a mismatched stamp (a crash between the two
+        The commit stamps the tier_latest snapshot it derives from;
+        readers treat a mismatched stamp (a crash between the two
         commits) as stale and fall back to the per-chunk argmax until
         the next flush heals it, so the head is an accelerator, never a
         correctness dependency."""
@@ -599,44 +598,29 @@ class RollupPipeline:
         head_tbl = self.table("tier_latest_head")
         cur = head_tbl.current()
         meta = {"base_latest_snapshot": snap.snapshot_id}
-        partitioned = bool(cur.files) and all(
-            "conv_bucket" in f.get("partition", {}) for f in cur.files)
-        merge = bool(cur.files) and not reseed
-        scope = None  # the touched buckets of a narrow partitioned write
-        if partitioned and merge:
-            bucket_of = F.pmod(F.xxhash64("conv_id"),
-                               F.lit(self.n_buckets)).cast("int")
-            buckets = sorted(int(r[0]) for r in convs.select(
-                bucket_of.alias("b")).distinct().collect())
-            if len(buckets) * 2 <= self.n_buckets:
-                scope = buckets
-        if merge:
-            old = head_tbl.read(self.spark)
-            if scope is not None:
-                old = old.filter(F.col("conv_bucket").isin(scope))
+        if cur.files and not reseed and all(
+                "conv_bucket" in f.get("partition", {}) for f in cur.files):
+            scope = sorted(buckets)
+            old = head_tbl.read(self.spark).filter(
+                F.col("conv_bucket").isin(scope))
             slots = old.join(F.broadcast(convs), "conv_id", "left_semi")
             winners = latest_from_tier(
                 candidates(slots), None,
                 [c for c in old.columns if c != "conv_id"])
-            head = (old.join(F.broadcast(convs), "conv_id", "left_anti")
-                    .unionByName(winners.select(*old.columns)))
+            head_tbl.overwrite_partitions_multi(
+                old.join(F.broadcast(convs), "conv_id", "left_anti")
+                .unionByName(winners.select(*old.columns)),
+                "conv_bucket", scope, meta=meta,
+                sort_within=["conv_id"])
         else:
             tier = lt.read(self.spark)
-            head = latest_from_tier(
-                tier, None, [c for c in tier.columns if c != "conv_id"])
-        if scope is not None:
-            head_tbl.overwrite_partitions_multi(
-                head, "conv_bucket", scope, meta=meta,
-                sort_within=["conv_id"])
-        elif partitioned or (sum(f["rows"] for f in (cur.files or snap.files))
-                             > HEAD_PARTITION_MIN_ROWS):
-            head_tbl.overwrite_partitioned(head, "conv_bucket", meta=meta,
-                                           sort_within=["conv_id"])
-        else:
-            head_tbl.overwrite(head.sort("conv_id"), meta=meta)
-        # reclaim superseded head files (for scoped commits only the
-        # touched buckets' replaced files are unreferenced), standard
-        # grace window protecting concurrent readers' pinned snapshots
+            head_tbl.overwrite_partitioned(
+                latest_from_tier(
+                    tier, None, [c for c in tier.columns if c != "conv_id"]),
+                "conv_bucket", meta=meta, sort_within=["conv_id"])
+        # reclaim superseded head files (for merges only the touched
+        # buckets' replaced files are unreferenced), standard grace
+        # window protecting concurrent readers' pinned snapshots
         head_tbl.vacuum()
 
     def _cascade(self) -> None:
@@ -707,7 +691,7 @@ class RollupPipeline:
         return None if floor_us is None else floor_us // 1000
 
     def _run_batch(self, canon: DataFrame, batch: list[int], fingerprints: dict,
-                   input_snapshot: int, metrics: dict) -> None:
+                   metrics: dict) -> None:
         """One distributed job + one atomic commit per table for a whole
         batch of chunks. Per-chunk lineage and checkpoint fingerprints are
         derived from the commit's own file manifest — no per-chunk jobs."""
@@ -778,7 +762,6 @@ class RollupPipeline:
         total_rows = sum(r for r, _ in stats.values()) or 1
         self.lineage.record_many([
             dict(job="rollup", phase="chunk", time_chunk=chunk,
-                 input_snapshot=input_snapshot,
                  input_files=",".join(sorted(new_files[chunk])),
                  row_count=stats.get(chunk, (0, 0))[0],
                  encoded_bytes=stats.get(chunk, (0, 0))[1],
@@ -786,7 +769,7 @@ class RollupPipeline:
                  wall_s=wall * stats.get(chunk, (0, 0))[0] / total_rows)
             for chunk in sorted(new_files)])
         for chunk in batch:
-            self.checkpoint.mark_done("rollup", input_snapshot, int(chunk),
+            self.checkpoint.mark_done("rollup", int(chunk),
                                       fingerprints[int(chunk)])
             metrics["chunks_run"] += 1
         metrics["rows"] += sum(r for r, _ in stats.values())

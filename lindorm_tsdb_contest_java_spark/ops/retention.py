@@ -49,11 +49,12 @@ _STATE_FILE = "retention.json"
 
 def read_retention_floor_us(pipeline_root: str) -> int | None:
     """Oldest microsecond the 1m tier is still contracted to hold, or
-    None when retention has never been applied. The cascade rebuild
-    freezes coarse buckets older than this floor (see
-    RollupPipeline._retention_stable); absent a floor it stays a plain
-    full rebuild, so late data backfilled into old buckets is always
-    picked up on tables that never expired anything."""
+    None when retention has never been applied. The incremental
+    cascade never recomputes a coarse window that starts below this
+    floor, so those windows keep the values materialized before their
+    1m inputs expired (see RollupPipeline._cascade_tier); absent a floor
+    no window is frozen, so late data backfilled into old buckets is
+    always picked up on tables that never expired anything."""
     try:
         with open(os.path.join(pipeline_root, _STATE_FILE)) as f:
             v = json.load(f).get("tier_1m_floor_us")

@@ -154,7 +154,7 @@ def test_flush_crash_between_run_and_truncate_recovers(spark, tmp_path):
     touched = crash._fast_flush_chunks(new_rows)
     assert touched
     crash._pipeline.run(crash._fast_flush_input(new_rows, touched),
-                        input_snapshot=0, restrict_chunks=touched)
+                        restrict_chunks=touched)
     assert crash._raw.current().files, "log still holds the batch (crash)"
 
     # recovery: a fresh engine's shutdown finds the leftover log
@@ -217,7 +217,7 @@ def test_unstamped_flush_state_is_verified_not_assumed(spark, tmp_path):
     pdf = _pdf()
     root = str(tmp_path / "nv")
     RollupPipeline(spark, root, n_buckets=8).run(
-        spark.createDataFrame(pdf), input_snapshot=0)
+        spark.createDataFrame(pdf))
     eng = _connect(spark, tmp_path, "nv")
     assert not os.path.exists(eng._flush_state_path())
     fresh = pdf.iloc[[0]].copy()

@@ -48,12 +48,12 @@ def _hashes(spark, root):
 def test_run_rerun_resume(spark, transcripts_df, tmp_path, monkeypatch):
     clean_root = str(tmp_path / "clean")
     p = RollupPipeline(spark, clean_root, n_buckets=8, chunk_us=CHUNK_US)
-    m1 = p.run(transcripts_df, input_snapshot=1)
+    m1 = p.run(transcripts_df)
     assert m1["chunks_run"] == m1["chunks_total"] > 1
     baseline = _hashes(spark, clean_root)
 
     # --- idempotence: re-run is a no-op and content is unchanged
-    m2 = RollupPipeline(spark, clean_root, n_buckets=8, chunk_us=CHUNK_US).run(transcripts_df, input_snapshot=1)
+    m2 = RollupPipeline(spark, clean_root, n_buckets=8, chunk_us=CHUNK_US).run(transcripts_df)
     assert m2["chunks_run"] == 0
     assert _hashes(spark, clean_root) == baseline
 
@@ -72,10 +72,10 @@ def test_run_rerun_resume(spark, transcripts_df, tmp_path, monkeypatch):
 
     monkeypatch.setattr(RollupPipeline, "_run_batch", crash_on_second_batch)
     with pytest.raises(RuntimeError, match="simulated failure"):
-        crashing.run(transcripts_df, input_snapshot=1)
+        crashing.run(transcripts_df)
     monkeypatch.undo()
     resumed = RollupPipeline(spark, crash_root, n_buckets=8, chunk_us=CHUNK_US)
-    m3 = resumed.run(transcripts_df, input_snapshot=1)
+    m3 = resumed.run(transcripts_df)
     assert 0 < m3["chunks_run"] < m3["chunks_total"]
     assert m3["chunks_done"] == 2
     assert _hashes(spark, crash_root) == baseline
@@ -88,13 +88,18 @@ def test_run_rerun_resume(spark, transcripts_df, tmp_path, monkeypatch):
     assert lin["time_chunk"].nunique() == m1["chunks_total"]
     assert (lin["input_files"].str.len() > 0).all()
 
-    # --- input change invalidates the checkpoint
-    with open(os.path.join(crash_root, "checkpoint.json")) as f:
+    # --- a checkpoint written by an older build still carries an
+    # input_snapshot key beside "done": it loads, and every chunk resumes
+    ck = os.path.join(crash_root, "checkpoint.json")
+    with open(ck) as f:
         st = json.load(f)
-    assert st["rollup"]["input_snapshot"] == 1
-    m4 = RollupPipeline(spark, crash_root, n_buckets=8, chunk_us=CHUNK_US).run(transcripts_df, input_snapshot=2)
-    assert m4["chunks_run"] == m4["chunks_total"]
-    assert _hashes(spark, crash_root) == baseline  # same input data -> same content
+    st["rollup"]["input_snapshot"] = 7
+    with open(ck, "w") as f:
+        json.dump(st, f)
+    m4 = RollupPipeline(spark, crash_root, n_buckets=8,
+                        chunk_us=CHUNK_US).run(transcripts_df)
+    assert m4["chunks_run"] == 0 and m4["chunks_done"] == m4["chunks_total"]
+    assert _hashes(spark, crash_root) == baseline
 
 
 def test_one_commit_handles_all_chunks(spark, transcripts_df, tmp_path):
@@ -102,7 +107,7 @@ def test_one_commit_handles_all_chunks(spark, transcripts_df, tmp_path):
     distributed partitioned write), not N sequential per-chunk commits."""
     root = str(tmp_path / "onejob")
     p = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US)
-    m = p.run(transcripts_df, input_snapshot=1)
+    m = p.run(transcripts_df)
     assert m["chunks_total"] > 1
     seg = SnapshotTable.load(os.path.join(root, "segments"))
     snap = seg.current()
@@ -153,17 +158,17 @@ def test_incremental_append_reprocesses_only_changed_chunks(spark, transcripts_p
     root = str(tmp_path / "incr")
     by_ts = transcripts_pdf.sort_values("ts").reset_index(drop=True)
     first = spark.createDataFrame(by_ts.iloc[: len(by_ts) * 3 // 4])
-    m1 = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(first, input_snapshot=1)
+    m1 = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(first)
     assert m1["chunks_run"] == m1["chunks_total"]
 
     # append the remaining quarter (touches the tail chunks only)
     full = spark.createDataFrame(by_ts)
-    m2 = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(full, input_snapshot=1)
+    m2 = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(full)
     assert 0 < m2["chunks_run"] < m2["chunks_total"], m2
 
     # final state equals a from-scratch run on the full data
     clean = str(tmp_path / "incr_clean")
-    RollupPipeline(spark, clean, n_buckets=8, chunk_us=CHUNK_US).run(full, input_snapshot=1)
+    RollupPipeline(spark, clean, n_buckets=8, chunk_us=CHUNK_US).run(full)
     assert _hashes(spark, root) == _hashes(spark, clean)
 
 
@@ -174,7 +179,7 @@ def test_chunk_files_are_bucket_ordered(spark, transcripts_df, tmp_path):
     import pyarrow.parquet as pq
     root = str(tmp_path / "ordered")
     RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(
-        spark.createDataFrame(transcripts_df.toPandas()), input_snapshot=1)
+        spark.createDataFrame(transcripts_df.toPandas()))
     seg = SnapshotTable.load(os.path.join(root, "segments"))
     checked = 0
     for f in seg.current().files:
@@ -212,7 +217,7 @@ def test_live_lock_still_blocks(tmp_path):
 def test_lineage_compaction_preserves_rows(spark, transcripts_df, tmp_path):
     root = str(tmp_path / "lc")
     p = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US)
-    p.run(transcripts_df, input_snapshot=1)
+    p.run(transcripts_df)
     n_before = p.lineage.read(spark).count()
     files_before = len(p.lineage.table.current().files)
     assert p.lineage.compact(max_files=0) is True  # force
@@ -247,7 +252,7 @@ def test_tier_files_are_conv_ordered(spark, transcripts_df, tmp_path):
     import pyarrow.parquet as pq
     root = str(tmp_path / "tierorder")
     RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(
-        spark.createDataFrame(transcripts_df.toPandas()), input_snapshot=1)
+        spark.createDataFrame(transcripts_df.toPandas()))
     keys = {"tier_conv_1m": ["conv_id"], "tier_conv_1h": ["conv_id"],
             "tier_conv_1d": ["conv_id"], "tier_latest": ["conv_id"],
             "tier_rate_1m": ["role", "tool"],

@@ -38,7 +38,7 @@ def _seg_chunks(root):
 
 def _run(spark, root, df):
     p = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US)
-    p.run(df, input_snapshot=1)
+    p.run(df)
     return p
 
 
@@ -133,7 +133,7 @@ def test_coarse_tiers_survive_1m_expiry(spark, transcripts_df, tmp_path):
     # incremental re-run over the unchanged raw input: expired chunks are
     # checkpointed done, so nothing is resurrected...
     m = RollupPipeline(spark, root, n_buckets=8, chunk_us=CHUNK_US).run(
-        transcripts_df, input_snapshot=1)
+        transcripts_df)
     assert m["chunks_run"] == 0
     assert _seg_chunks(root) == chunks[2:]
     # ...and the coarse cascade (rebuilt on every run) kept its original
@@ -273,7 +273,7 @@ def test_lineage_compact_mixed_schemas_keeps_types(spark, transcripts_df, tmp_pa
     assert p.lineage.compact(max_files=0) is True
     # post-compaction append of rollup-shaped rows (int64 columns again)
     p.lineage.record_many([dict(job="rollup", phase="chunk", time_chunk=99,
-                                input_snapshot=1, input_files="x",
+                                input_files="x",
                                 row_count=1, encoded_bytes=2, wall_s=0.1)])
     lin = p.lineage.read(spark)  # threw before the fix
     dtypes = dict(lin.dtypes)
