@@ -46,7 +46,9 @@ import json
 import os
 
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .operators import queries as Q
 from .operators.tiers import (
@@ -751,57 +753,78 @@ class TranscriptTSDB:
         reference decodes exactly the straddling blocks and answers the
         interior from AggBuckets (TSDBEngineImpl.java:254-262). Edge
         bounds are pure arithmetic on (lb, ub), so no data-dependent
-        driver branching."""
+        driver branching; a minute-aligned range has no edges and builds
+        no decode plan (an empty relation)."""
         lo = -(-lb_ms // MINUTE_MS) * MINUTE_MS   # ceil to tier grid
         hi = (ub_ms // MINUTE_MS) * MINUTE_MS     # floor to tier grid
         ranges = [(lb_ms, ub_ms)] if lo >= hi else [(lb_ms, lo), (hi, ub_ms)]
-        ranges = [r for r in ranges if r[0] < r[1]]
-        if not ranges:  # fully grid-aligned: no edge rows (empty decode)
-            ranges = [(lb_ms, lb_ms)]
-        parts = [self._range_decode(conv_id, l, u, column) for l, u in ranges]
+        parts = [self._range_decode(conv_id, l, u, column)
+                 for l, u in ranges if l < u]
+        if not parts:
+            return self._no_rows(column)
         out = parts[0]
         for more in parts[1:]:
             out = out.unionByName(more)
         return out
 
-    def _downsample_raw(self, tier, conv_id: str, column: str, lb_ms: int,
-                        ub_ms: int, interval_ms: int,
-                        filter_op: str | None, filter_value) -> DataFrame:
-        """STRADDLING-ONLY decode for the routed downsample: the reference
-        decodes only the blocks the filter cuts through and answers
-        covered blocks from AggBuckets (TSDBEngineImpl.java:417-439).
-        The straddle minutes are classified from the 1m tier with the
-        predicates routed_downsample shares (plans/router.classify_preds)
-        and stay a DataFrame; only their [min, max] envelope reaches the
-        driver. One scan, bounded by that envelope's chunk range and ts
+    def _no_rows(self, column: str) -> DataFrame:
+        """An empty decode result: a local relation, which the optimizer
+        prunes from every union and join it feeds."""
+        return self.spark.createDataFrame(to_arrow_schema(
+            decoded_row_schema(self._range_cols(column))).empty_table())
+
+    def _downsample_inputs(self, conv_id: str, column: str, lb_ms: int,
+                           ub_ms: int, interval_ms: int,
+                           filter_op: str | None, filter_value
+                           ) -> tuple[DataFrame, DataFrame]:
+        """The routed downsample's (tier, raw) inputs, each read once.
+
+        tier: the conversation's 1m tier rows in [lb, ub), read by ONE
+        parallel scan and collected (at most (ub - lb) / 1 min rows),
+        each with its straddle class `_cut` from the predicates
+        routed_downsample shares (plans/router.classify_preds), and
+        served back as a one-partition local relation. The envelope,
+        the decode's minute semi-join, the covered part and the
+        empty-range marker all come from it, with no job or exchange of
+        their own.
+
+        raw: the STRADDLING-ONLY decode — the reference decodes only the
+        blocks the filter cuts through and answers covered blocks from
+        AggBuckets (TSDBEngineImpl.java:417-439). One scan, bounded by
+        the straddle minutes' [min, max] envelope in chunk range and ts
         zone, decodes just the segments semi-joined to the straddle set
-        (segments_overlapping_minutes): covered minutes' segments are
-        never decoded, and an empty set (e.g. unfiltered queries) reads
-        no table. An unaligned grid decodes the whole range instead: the
-        router then falls back to the plain downsample, which needs every
-        raw row."""
+        (segments_overlapping_minutes), in one partition so that the
+        router's aggregates need no exchange. An empty set (e.g.
+        unfiltered queries) reads no table.
+
+        An unaligned grid decodes the whole range instead: the router
+        then falls back to the plain downsample, which needs every raw
+        row and no tier."""
+        chunks = self._chunks(lb_ms, ub_ms)
         aligned = not ((lb_ms % MINUTE_MS) or (interval_ms % MINUTE_MS)
-                      or (ub_ms - lb_ms) % interval_ms)
+                       or (ub_ms - lb_ms) % interval_ms)
         if not aligned:
-            return self._range_decode(conv_id, lb_ms, ub_ms, column)
+            return (self._tier_1m.read(self.spark, chunks),
+                    self._range_decode(conv_id, lb_ms, ub_ms, column))
         # the decoded-view column type, straight from the decode schema
         vtype = decoded_row_schema([column])[column].dataType.simpleString()
         pass_all, pass_none = classify_preds(column, filter_op,
                                              filter_value, vtype)
-        straddle = (tier.filter((F.col("conv_id") == conv_id)
-                                & (F.col("bucket_ms") >= lb_ms)
-                                & (F.col("bucket_ms") < ub_ms))
-                    .filter(~pass_all & ~pass_none).select("bucket_ms"))
-        # one partition satisfies the global aggregate without a shuffle
-        # stage: the envelope costs one Spark job (one conversation's
-        # tier rows in range, so one task reads them)
-        lo, hi = (straddle.coalesce(1)
-                  .agg(F.min("bucket_ms"), F.max("bucket_ms")).first())
-        if lo is None:
-            return self.spark.createDataFrame(
-                [], decoded_row_schema(self._range_cols(column)))
-        return self._range_decode(conv_id, int(lo), int(hi) + MINUTE_MS,
-                                  column, straddle)
+        rows = (self._tier_1m.read(self.spark, chunks)
+                .filter((F.col("conv_id") == conv_id)
+                        & (F.col("bucket_ms") >= lb_ms)
+                        & (F.col("bucket_ms") < ub_ms))
+                .withColumn("_cut", ~pass_all & ~pass_none)
+                .toArrow())
+        tier = self.spark.createDataFrame(rows).coalesce(1)
+        cut = pc.min_max(pc.filter(rows["bucket_ms"], rows["_cut"]))
+        if not cut["min"].is_valid:
+            return tier, self._no_rows(column)
+        straddle = tier.filter(F.col("_cut")).select("bucket_ms")
+        raw = self._range_decode(conv_id, cut["min"].as_py(),
+                                 cut["max"].as_py() + MINUTE_MS, column,
+                                 straddle)
+        return tier, raw.coalesce(1)
 
     # ---------- the four query types ----------
 
@@ -893,11 +916,9 @@ class TranscriptTSDB:
         segments. Buffered state: memtable-visible canonical path."""
         if self._committed():
             if column in _TIER_COLUMNS:
-                tier = self._tier_1m.read(self.spark,
-                                          self._chunks(lb_ms, ub_ms))
-                raw = self._downsample_raw(tier, conv_id, column, lb_ms,
-                                           ub_ms, interval_ms, filter_op,
-                                           filter_value)
+                tier, raw = self._downsample_inputs(
+                    conv_id, column, lb_ms, ub_ms, interval_ms, filter_op,
+                    filter_value)
                 return routed_downsample(raw, tier, conv_id, column, lb_ms,
                                          ub_ms, interval_ms, agg, filter_op,
                                          filter_value)

@@ -136,8 +136,8 @@ def downsample(df: DataFrame, conv_id: str, column: str, lb_ms: int, ub_ms: int,
                filter_value=None, sentinel_as_null: bool = False) -> DataFrame:
     """Filtered fixed-window downsample (executeDownsampleQuery,
     TSDBEngineImpl.java:397-674). One hash aggregate over lb-anchored
-    integer buckets + a generated window skeleton left-join for the
-    sentinel rows; no driver-side loop over windows.
+    integer buckets, whose row count per window is also the empty-range
+    marker (fill_windows); no driver-side loop over windows.
 
     sentinel_as_null swaps the Java bit-pattern sentinels for SQL NULL —
     used by the cross-engine oracle harness where NaN/-Inf hashing is not
@@ -146,46 +146,65 @@ def downsample(df: DataFrame, conv_id: str, column: str, lb_ms: int, ub_ms: int,
     if (ub_ms - lb_ms) % interval_ms != 0:
         raise ValueError("(ub - lb) % interval != 0 (TSDBEngine.java:209-215)")
     n_windows = (ub_ms - lb_ms) // interval_ms
-    spark = df.sparkSession
 
     scoped = df.filter((F.col("conv_id") == conv_id) & _range(lb_ms, ub_ms))
     w = F.floor((F.col("ts_us") - F.lit(lb_ms * 1000)) / F.lit(interval_ms * 1000))
-    survivors = F.when(
-        _pred(column, filter_op, filter_value, dict(df.dtypes)[column]),
-        F.col(column))
+    col_type = dict(df.dtypes)[column]
+    survivors = F.when(_pred(column, filter_op, filter_value, col_type),
+                       F.col(column))
     if agg == AVG:
         value = (F.sum(survivors) / F.count(survivors)).cast("double")
-        sentinel = F.lit(None).cast("double") if sentinel_as_null else F.lit(DOUBLE_SENTINEL)
     elif agg == MAX:
         value = F.max(survivors)
-        col_type = dict(df.dtypes)[column]
-        if sentinel_as_null:
-            sentinel = F.lit(None).cast(col_type)
-        elif col_type in ("int", "bigint", "smallint", "tinyint"):
-            sentinel = F.lit(INT_SENTINEL)
-        else:
-            sentinel = F.lit(DOUBLE_SENTINEL)
     else:
         raise ValueError(f"unsupported agg {agg!r}")
 
     per_window = scoped.groupBy(w.alias("_w")).agg(value.alias("_v"),
-                                                   F.count("*").alias("_n"))
-    # marker enforces "whole range empty -> empty result" without a collect
-    marker = scoped.agg(F.count("*").alias("_any")).filter(F.col("_any") > 0)
-    skeleton = spark.range(n_windows).select(F.col("id").alias("_w"))
-    # per_window is at most n_windows rows (one per non-empty window of a
-    # single conversation's range) — broadcast it explicitly: size
-    # ESTIMATES for an aggregate over a filtered scan are wildly wrong,
-    # so the planner picked a SortMergeJoin here (exchange + sort on both
-    # sides of a <=744-row join; r07 plan audit). BroadcastHashJoin drops
-    # both. Guide §3.1: hint when you KNOW the side is small.
+                                                   F.count("*").alias("_rows"))
+    return fill_windows(per_window, conv_id, lb_ms, interval_ms, n_windows,
+                        window_sentinel(agg, col_type, sentinel_as_null))
+
+
+def window_sentinel(agg: str, col_type: str, as_null: bool = False) -> Column:
+    """The value of a window with no surviving row: AVG -> the double
+    bit pattern, MAX -> the column's typed one (int columns
+    Integer.MIN_VALUE), or a typed SQL NULL when `as_null`."""
+    if agg == AVG:
+        return F.lit(None).cast("double") if as_null else F.lit(DOUBLE_SENTINEL)
+    if as_null:
+        return F.lit(None).cast(col_type)
+    if col_type in _INT_TYPES:
+        return F.lit(INT_SENTINEL)
+    return F.lit(DOUBLE_SENTINEL)
+
+
+def fill_windows(per_window: DataFrame, conv_id: str, lb_ms: int,
+                 interval_ms: int, n_windows: int, sentinel: Column) -> DataFrame:
+    """Every window's result row from a per-window aggregate with
+    columns `_w` (window id), `_v` (its value, NULL when no row
+    survived the filter) and `_rows` (rows of the range in the window).
+
+    One global aggregate folds the windows into a map and sums `_rows`,
+    the empty-range marker: a range with no rows returns no row. A
+    generated sequence of window ids reads the map, a missing or NULL
+    value becoming the sentinel. Taking the marker from the same
+    aggregate plans the input once (a separate marker aggregate, joined
+    in, plans and runs the input's scan and decode a second time: Spark
+    does not reuse the exchange), and the global aggregate leaves one
+    partition, so the generate and the sort add no exchange.
+    """
+    windows = F.sequence(F.lit(0).cast("long"),
+                         F.lit(n_windows - 1).cast("long"))
     return (
-        skeleton.crossJoin(F.broadcast(marker))
-        .join(F.broadcast(per_window), "_w", "left")
+        per_window.agg(
+            F.map_from_entries(F.collect_list(F.struct("_w", "_v"))).alias("_m"),
+            F.sum("_rows").alias("_rows"))
+        .filter(F.col("_rows") > 0)
+        .select(F.explode(windows).alias("_w"), "_m")
         .select(
             F.lit(conv_id).alias("conv_id"),
             (F.lit(lb_ms) + F.col("_w") * F.lit(interval_ms)).alias("ts_ms"),
-            F.coalesce(F.col("_v"), sentinel).alias("value"),
+            F.coalesce(F.element_at("_m", F.col("_w")), sentinel).alias("value"),
         )
         .orderBy("ts_ms")
     )

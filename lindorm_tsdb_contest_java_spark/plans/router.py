@@ -156,6 +156,16 @@ def routed_downsample(
     - only *straddling* buckets (filter cuts through the value range) are
       recomputed from raw rows — the analog of decoding a straddling block.
 
+    Tier buckets and raw rows meet in ONE union grouped by minute, so
+    each minute takes its tier pre-aggregates, its raw rows' values (a
+    straddling minute) or nothing, and every tier bucket counts its
+    turns toward the empty-range marker (bucket counts cover all raw
+    rows) that operators.queries.fill_windows reads. The plan has no
+    join: on single-partition inputs — the engine passes its collected
+    tier slice and a one-partition straddle decode — it runs in its
+    result job with no exchange and no broadcast, and other inputs get
+    the exchanges their aggregates need.
+
     Requires lb/interval aligned to the tier grid; falls back to the plain
     downsample otherwise. Unfiltered queries classify every bucket as
     fully-passing. Sentinel/empty-range semantics identical to
@@ -170,72 +180,71 @@ def routed_downsample(
                             agg, filter_op, filter_value,
                             sentinel_as_null=sentinel_as_null)
     n_windows = (ub_ms - lb_ms) // interval_ms
-    spark = raw.sparkSession
     sum_col = _TIER_COLS[column][0]
-    min_col, max_col = _TIER_MINMAX[column]
+    max_col = _TIER_MINMAX[column][1]
     vtype = dict(raw.dtypes)[column]
-    int_col = vtype in ("int", "bigint", "smallint", "tinyint")
 
     buckets = tier_1m.filter(
         (F.col("conv_id") == conv_id)
         & (F.col("bucket_ms") >= lb_ms) & (F.col("bucket_ms") < ub_ms))
     pass_all, pass_none = classify_preds(column, filter_op, filter_value, vtype)
 
-    w_of_bucket = F.floor((F.col("bucket_ms") - F.lit(lb_ms)) / F.lit(interval_ms))
-    covered = (buckets.filter(pass_all)
-               .select(w_of_bucket.alias("_w"),
-                       F.col(sum_col).alias("_sum"),
-                       F.col("n_turns").alias("_cnt"),
-                       F.col(max_col).cast(vtype).alias("_max")))
-
-    straddle = (buckets.filter(~pass_all & ~pass_none)
-                .select(F.col("bucket_ms").alias("_sb")))
-    raw_bucket = (F.floor(F.col("ts_us") / F.lit(tier_width_ms * 1000))
-                  * F.lit(tier_width_ms))
+    # _k: 1 = fully passing (tier pre-aggregates), 2 = straddling (raw
+    # rows); a fully failing bucket adds only its turns to the marker
+    no_long, no_value = F.lit(None).cast("long"), F.lit(None).cast(vtype)
+    from_tier = buckets.select(
+        F.col("bucket_ms").alias("_b"),
+        F.when(pass_all, 1).when(~pass_none, 2).alias("_k"),
+        F.when(pass_all, F.col(sum_col)).alias("_tsum"),
+        F.when(pass_all, F.col("n_turns")).alias("_tcnt"),
+        F.when(pass_all, F.col(max_col).cast(vtype)).alias("_tmax"),
+        F.col("n_turns").alias("_rows"),
+        no_long.alias("_rsum"), no_long.alias("_rcnt"),
+        no_value.alias("_rmax"))
     survivors = F.when(Q._pred(column, filter_op, filter_value, vtype),
                        F.col(column))
     from_raw = (
         raw.filter(F.col("conv_id") == conv_id)
-        .join(F.broadcast(straddle), raw_bucket == F.col("_sb"))
-        .select(
-            F.floor((F.col("_sb") - F.lit(lb_ms)) / F.lit(interval_ms)).alias("_w"),
-            _in_sum_units(column, survivors).alias("_v"),
-            survivors.cast(vtype).alias("_vn"))
-        .groupBy("_w")
-        .agg(F.sum("_v").alias("_sum"), F.count("_v").alias("_cnt"),
-             F.max("_vn").alias("_max"))
+        .select((F.floor(F.col("ts_us") / F.lit(tier_width_ms * 1000))
+                 * F.lit(tier_width_ms)).alias("_b"),
+                F.lit(None).cast("int").alias("_k"),
+                no_long.alias("_tsum"), no_long.alias("_tcnt"),
+                no_value.alias("_tmax"), no_long.alias("_rows"),
+                _in_sum_units(column, survivors).alias("_rsum"),
+                survivors.isNotNull().cast("long").alias("_rcnt"),
+                survivors.cast(vtype).alias("_rmax"))
+        .filter((F.col("_b") >= lb_ms) & (F.col("_b") < ub_ms))
+    )
+    per_minute = (
+        from_tier.unionByName(from_raw).groupBy("_b")
+        .agg(F.max("_k").alias("_k"), F.sum("_tsum").alias("_tsum"),
+             F.sum("_tcnt").alias("_tcnt"), F.max("_tmax").alias("_tmax"),
+             F.sum("_rows").alias("_rows"), F.sum("_rsum").alias("_rsum"),
+             F.sum("_rcnt").alias("_rcnt"), F.max("_rmax").alias("_rmax"))
     )
 
-    parts = covered.unionByName(from_raw)
+    def if_straddling(c: str) -> Column:
+        return F.when(F.col("_k") == 2, F.col(c))
+
+    per_minute = per_minute.select(
+        F.floor((F.col("_b") - F.lit(lb_ms)) / F.lit(interval_ms)).alias("_w"),
+        F.coalesce("_tsum", if_straddling("_rsum")).alias("_sum"),
+        F.coalesce("_tcnt", if_straddling("_rcnt"), F.lit(0)).alias("_cnt"),
+        F.coalesce("_tmax", if_straddling("_rmax")).alias("_max"),
+        "_rows")
+
     if agg == Q.AVG:
         value = _avg(column)
-        sentinel = (F.lit(None).cast("double") if sentinel_as_null
-                    else F.lit(Q.DOUBLE_SENTINEL))
     elif agg == Q.MAX:
-        # native type + typed sentinel: identical schema to Q.downsample,
-        # whether or not the tier grid aligned (ADVICE r01)
         value = F.max("_max")
-        if sentinel_as_null:
-            sentinel = F.lit(None).cast(vtype)
-        elif int_col:
-            sentinel = F.lit(Q.INT_SENTINEL)
-        else:
-            sentinel = F.lit(Q.DOUBLE_SENTINEL)
     else:
         raise ValueError(f"unsupported agg {agg!r}")
-    per_window = (parts.groupBy("_w")
-                  .agg(value.alias("_v"), F.sum("_cnt").alias("_n"))
-                  .withColumn("_v", F.when(F.col("_n") > 0, F.col("_v"))))
-
-    # empty-range marker from the tier (bucket counts cover all raw rows)
-    marker = (buckets.agg(F.sum("n_turns").alias("_any"))
-              .filter(F.col("_any") > 0).select(F.lit(1).alias("_one")))
-    skeleton = spark.range(n_windows).select(F.col("id").alias("_w"))
-    return (
-        skeleton.crossJoin(F.broadcast(marker))
-        .join(per_window, "_w", "left")
-        .select(F.lit(conv_id).alias("conv_id"),
-                (F.lit(lb_ms) + F.col("_w") * F.lit(interval_ms)).alias("ts_ms"),
-                F.coalesce(F.col("_v"), sentinel).alias("value"))
-        .orderBy("ts_ms")
-    )
+    per_window = (per_minute.groupBy("_w")
+                  .agg(value.alias("_v"), F.sum("_cnt").alias("_n"),
+                       F.sum("_rows").alias("_rows"))
+                  .select("_w", F.when(F.col("_n") > 0, F.col("_v")).alias("_v"),
+                          "_rows"))
+    # native type + typed sentinel: identical schema to Q.downsample,
+    # whether or not the tier grid aligned (ADVICE r01)
+    return Q.fill_windows(per_window, conv_id, lb_ms, interval_ms, n_windows,
+                          Q.window_sentinel(agg, vtype, sentinel_as_null))

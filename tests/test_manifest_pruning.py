@@ -10,6 +10,7 @@ are ~46 files per table: more than Spark's 32-path parallel-listing
 threshold.
 """
 
+import itertools
 import os
 
 import pandas as pd
@@ -260,14 +261,20 @@ def test_manifest_read_matches_spark_inference(spark, store, tmp_path):
 
 
 def _jobs_while(spark, fn) -> int:
+    """Spark jobs `fn()` submits, counted in a job group of its own (the
+    status tracker keeps a group's finished jobs)."""
     sc = spark.sparkContext
-    sc.setJobGroup("manifest-probe", "count jobs of one read")
+    group = f"manifest-probe-{next(_PROBES)}"
+    sc.setJobGroup(group, "count jobs of one read")
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup("manifest-probe"))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_PROBES = itertools.count()
 
 
 def test_building_a_read_submits_no_jobs(spark, store, monkeypatch):

@@ -135,9 +135,10 @@ def test_downsample_interval_contract(canon):
 
 
 def test_downsample_single_shuffle_plan(canon):
-    """The whole downsample is one hash-agg + broadcast joins — no window
-    sort, no per-window jobs (scale check)."""
+    """The whole downsample is one hash-agg + one global fold of its
+    windows — no join, no window sort, no per-window jobs (scale
+    check)."""
     got = Q.downsample(canon, HOT, "text_len", 0, 10**12, 10**9, "AVG", "GREATER", 0)
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, "skeleton/marker joins must broadcast"
-    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan, "skeleton and marker come from the aggregate"
